@@ -903,6 +903,7 @@ def _token_shingle_kernel(n: int, n_words: int, counts: bool = False):
                 g = (
                     tb.group_by(key_names, use_threads=False)
                     .aggregate([([], "count_all")])
+                    .select(key_names + ["count_all"])
                     .rename_columns(key_names + ["n_occ"])
                 )
                 for rb in g.to_batches():

@@ -129,7 +129,3 @@ def compile_tag_pattern(match: str) -> CompiledTagPattern:
     regex = re.sub(r"(\.\*)+", ".*", regex)
     return CompiledTagPattern(match, "regex", "\\A" + regex + "\\z")
 
-
-def tag_match_col(tag: Column, match: str) -> Column:
-    """One-shot helper: compile + produce the Column predicate."""
-    return compile_tag_pattern(match).column(tag)

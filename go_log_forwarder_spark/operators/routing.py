@@ -44,23 +44,28 @@ class SinkSpec:
         return compile_tag_pattern(self.match)
 
 
-def route_exploded(df: DataFrame, sinks: list[SinkSpec], tag_col: str = "tag") -> DataFrame:
-    """Add a ``sink`` column, one output row per (event, matching sink).
+def route_exploded(
+    df: DataFrame,
+    sinks: list[SinkSpec],
+    tag_col: str = "tag",
+    by_index: bool = False,
+) -> DataFrame:
+    """Add a ``sink`` column, one output row per (event, matching sink),
+    holding the sink's name, or its position in ``sinks`` when
+    ``by_index``.
 
     Rows matching no sink are dropped (they would reach no output)."""
     tag = F.col(tag_col)
     candidates = F.array(
         *[
-            F.when(s.compiled.column(tag), F.lit(s.name)).otherwise(F.lit(None))
-            for s in sinks
+            F.when(s.compiled.column(tag), F.lit(i if by_index else s.name)).otherwise(
+                F.lit(None)
+            )
+            for i, s in enumerate(sinks)
         ]
     )
     matched = F.filter(candidates, lambda x: x.isNotNull())
     return df.withColumn("sink", F.explode(matched))
-
-
-def sink_predicates(sinks: list[SinkSpec], tag_col: str = "tag") -> dict[str, F.Column]:
-    return {s.name: s.compiled.column(F.col(tag_col)) for s in sinks}
 
 
 def fan_out_writes(

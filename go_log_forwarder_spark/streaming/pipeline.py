@@ -8,8 +8,13 @@ Spark mapping:
   offset tracking natively, subsuming tail's stat-loop/inode bookkeeping,
   tail.go:201-325);
 - the 1 s flush ticker -> ``trigger(processingTime="1 second")``;
-- the fan-out -> ``foreachBatch`` reusing the EXACT batch pipeline function
-  (one code path for batch and streaming — this is the design point);
+- the fan-out -> the EXACT batch pipeline function (one code path for
+  batch and streaming — this is the design point) plus the routing,
+  planned ONCE on the stream when the query starts; ``foreachBatch`` then
+  writes each micro-batch in one job to a staging directory partitioned
+  by sink and publishes each sink's part to ``<out>/<sink>/batch=<id>``
+  by rename (a copy on object stores). A sink with no rows in a batch
+  gets no directory for it;
 - resume -> the streaming checkpoint dir (offset log + commits), the
   SQLite-offset analog (repository.go:50-120) with exactly-once sinks.
 
@@ -26,7 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.routing import SinkSpec
+from ..operators.routing import SinkSpec, route_exploded
 
 
 def stream_events(
@@ -49,36 +54,78 @@ def run_foreach_batch(
     tag_col: str = "tag",
     shed_per_source: int | None = None,
 ):
-    """engine.go:137-143 fan-out per micro-batch: the batch pipeline_fn runs
-    unchanged inside foreachBatch; each sink appends its tag-filtered view.
-    ``shed_per_source`` opts into :func:`shed_load` BEFORE the pipeline
-    (the reference sheds at the input edge, tcp.go:199-205).
+    """engine.go:137-143 fan-out per micro-batch: every event reaches every
+    sink whose tag pattern it matches, landing at
+    ``<out_dir>/<sink>/batch=<id>``.
 
-    Exactly-once: the checkpoint commit log plus idempotent per-batch
-    parquet appends under ``batch=<id>`` directories (a retried batch id
-    overwrites its own directory)."""
+    ``pipeline_fn`` must be a stateless transform that is legal on a
+    stream (parsers, filters, projections, static-table joins). It and the
+    routing are applied to ``stream_df`` ONCE, when the query starts, so a
+    micro-batch costs no Python-side planning. ``shed_per_source`` opts
+    into :func:`shed_load` BEFORE the pipeline (the reference sheds at the
+    input edge, tcp.go:199-205); its ``row_number`` window is not legal on
+    a streaming plan, so on that path shed -> pipeline -> route run inside
+    the batch body instead.
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if shed_per_source is not None:
-            batch_df = shed_load(batch_df, max_per_source=shed_per_source)
-        kept = pipeline_fn(batch_df)
-        kept = kept.persist()
-        try:
-            for s in sinks:
-                (
-                    kept.filter(s.compiled.column(F.col(tag_col)))
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(out_dir, s.name, f"batch={batch_id}"))
-                )
-        finally:
-            kept.unpersist()
+    Each micro-batch is ONE write job (see :func:`_write_and_publish`):
+    routed rows land partitioned by sink in ``<out_dir>/_staging``, then
+    each sink's partition is renamed into place. A sink that gets no rows
+    in a batch gets no ``batch=<id>`` directory.
+
+    Exactly-once: the checkpoint commit log plus an idempotent publish —
+    a replayed batch id rewrites its staging directory, then deletes and
+    re-publishes every sink's ``batch=<id>`` directory, including one that
+    got no rows this time."""
+
+    def route(df: DataFrame) -> DataFrame:
+        return route_exploded(pipeline_fn(df), sinks, tag_col, by_index=True)
+
+    if shed_per_source is None:
+        planned = route(stream_df)
+
+        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+            _write_and_publish(batch_df, batch_id, sinks, out_dir)
+
+    else:
+        planned = stream_df
+
+        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+            shed = shed_load(batch_df, max_per_source=shed_per_source)
+            _write_and_publish(route(shed), batch_id, sinks, out_dir)
 
     return (
-        stream_df.writeStream.foreachBatch(process_batch)
+        planned.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
     )
+
+
+def _write_and_publish(
+    routed: DataFrame, batch_id: int, sinks: list[SinkSpec], out_dir: str
+) -> None:
+    """Write one routed micro-batch in one job, partitioned by sink index
+    (so no sink name is ever path-escaped) under
+    ``<out_dir>/_staging/batch=<id>``, then publish each sink's partition
+    to ``<out_dir>/<sink>/batch=<id>`` with a Hadoop-FileSystem delete +
+    rename. Every sink's target is deleted first, so a replay never leaves
+    a stale directory behind. The rename is a metadata operation on HDFS
+    and local disk; on object stores (s3a, gs, abfs without HNS) it is a
+    copy."""
+    staging = os.path.join(out_dir, "_staging", f"batch={batch_id}")
+    routed.write.mode("overwrite").partitionBy("sink").parquet(staging)
+    spark = routed.sparkSession
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = path(out_dir).getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    for i, s in enumerate(sinks):
+        dst = path(os.path.join(out_dir, s.name, f"batch={batch_id}"))
+        fs.delete(dst, True)
+        src = path(staging, f"sink={i}")
+        if fs.exists(src):
+            fs.mkdirs(dst.getParent())
+            if not fs.rename(src, dst):
+                raise OSError(f"could not publish {src} to {dst}")
+    fs.delete(path(staging), True)
 
 
 def shed_load(
@@ -142,8 +189,6 @@ def windowed_counts(
 ) -> DataFrame:
     """Watermarked tumbling-window per-sink counts (north-rule extension;
     the reference has no event-time windows — SURVEY §2.9)."""
-    from ..operators.routing import route_exploded
-
     routed = route_exploded(
         stream_df.withWatermark(time_col, watermark), sinks, tag_col
     )

@@ -2,6 +2,7 @@
 checkpointed restart processes only new files (exactly-once)."""
 
 import datetime
+import os
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,6 +63,93 @@ def test_stream_fanout_and_restart(spark, tmp_path):
     q2.stop()
     ids = sorted(r["id"] for r in spark.read.parquet(f"{outdir}/all").select("id").collect())
     assert ids == list(range(80))  # no dup, no loss across restart
+
+
+def _one_file_per_batch(spark, indir, ranges=()):
+    """Write one parquet file per (lo, hi) id range, then stream every file
+    in ``indir`` back one file per micro-batch."""
+    for lo, hi in ranges:
+        _mk_batch(spark, lo, hi).coalesce(1).write.mode("append").parquet(indir)
+    return spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(indir)
+
+
+def _drain(stream_df, sinks, outdir, ckpt):
+    q = run_foreach_batch(stream_df, _pipeline, sinks, outdir, ckpt)
+    try:
+        q.processAllAvailable()
+        return [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+
+
+def _sink_ids(spark, path):
+    return sorted(r["id"] for r in spark.read.parquet(path).select("id").collect())
+
+
+def test_stream_replayed_batch_is_published_once(spark, tmp_path):
+    """A batch whose commit is lost is replayed on restart: it rewrites its
+    staging dir and re-publishes every sink, so no id lands twice."""
+    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    ranges = [(0, 30), (30, 60)]
+    assert len(_drain(_one_file_per_batch(spark, indir, ranges), SINKS, outdir, ckpt)) == 2
+    commits = os.path.join(ckpt, "commits")
+    newest = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(newest), f".{newest}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+
+    replayed = _drain(_one_file_per_batch(spark, indir), SINKS, outdir, ckpt)
+    assert [p["batchId"] for p in replayed] == [newest]
+    assert _sink_ids(spark, f"{outdir}/all") == list(range(60))
+    assert _sink_ids(spark, f"{outdir}/err") == [i for i in range(60) if i % 3 == 0]
+    assert not os.path.exists(os.path.join(outdir, "_staging", f"batch={newest}"))
+
+
+def test_stream_sink_without_rows_gets_no_batch_dir(spark, tmp_path):
+    """A sink that matches nothing in a micro-batch is not published for it;
+    q_stream_route_counts reads a missing sink as 0 rows."""
+    outdir = str(tmp_path / "out")
+    sinks = SINKS + [SinkSpec("none", "no-such-tag")]
+    # one batch has ids divisible by 3 (err rows), the other ({1, 2}) none
+    stream = _one_file_per_batch(spark, str(tmp_path / "in"), [(0, 6), (1, 3)])
+    _drain(stream, sinks, outdir, str(tmp_path / "ckpt"))
+    assert sorted(os.listdir(f"{outdir}/all")) == ["batch=0", "batch=1"]
+    assert len(os.listdir(f"{outdir}/err")) == 1
+    assert not os.path.exists(f"{outdir}/none")
+
+
+def test_stream_sink_name_is_not_path_escaped(spark, tmp_path):
+    """Staging partitions by sink index, so a name Spark would escape in a
+    partition path still lands verbatim at <out>/<sink>/batch=<id>."""
+    outdir = str(tmp_path / "out")
+    sinks = [SinkSpec("web=1", "*"), SinkSpec("a b%", "evt-err*")]
+    stream = _one_file_per_batch(spark, str(tmp_path / "in"), [(0, 9)])
+    _drain(stream, sinks, outdir, str(tmp_path / "ckpt"))
+    assert _sink_ids(spark, f"{outdir}/web=1/batch=0") == list(range(9))
+    assert _sink_ids(spark, f"{outdir}/a b%/batch=0") == [0, 3, 6]
+
+
+def test_stream_one_job_per_micro_batch(spark, tmp_path):
+    """Every sink of a non-empty micro-batch is written by ONE Spark job.
+    Job ids are sequential, so the jobs run between two probe jobs are
+    exactly the drain's."""
+    sc = spark.sparkContext
+
+    def probe_ids():
+        sc.setJobGroup("glfs-job-probe", "job-count probe")
+        try:
+            spark.range(1).collect()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        return set(sc.statusTracker().getJobIdsForGroup("glfs-job-probe"))
+
+    stream = _one_file_per_batch(spark, str(tmp_path / "in"), [(0, 20), (20, 40), (40, 60)])
+    before = probe_ids()
+    batches = _drain(stream, SINKS, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    after = probe_ids() - before
+    assert len(batches) == 3
+    assert min(after) - max(before) - 1 == len(batches)
 
 
 def test_running_counter_stateful(spark, tmp_path):
