@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import hex60_col, hex60_sql, micro_col, micro_sql, words_col, words_sql
+from .textstats import hex60_col, hex60_sql, micro_col, words_col, words_sql
 
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
@@ -102,27 +102,6 @@ def jaccard_pairs(
     return j.filter(F.col("jaccard_micro") >= int(threshold * 1e6)).select(
         "id_a", "id_b", "jaccard_micro"
     )
-
-
-def jaccard_pairs_sql(table: str, threshold: float = 0.6, text_col: str = "text", id_col: str = "doc_id") -> str:
-    ws = words_sql(text_col)
-    return f"""
-        WITH dw AS (
-            SELECT DISTINCT {id_col} AS id, unnest({ws}) AS word FROM {table}
-        ),
-        sizes AS (SELECT id, COUNT(*) AS sz FROM dw GROUP BY id),
-        inter AS (
-            SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-            FROM dw a JOIN dw b ON a.word = b.word AND a.id < b.id
-            GROUP BY 1, 2
-        )
-        SELECT id_a, id_b,
-               {micro_sql('CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)')} AS jaccard_micro
-        FROM inter
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE {micro_sql('CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)')} >= {int(threshold * 1e6)}
-    """
 
 
 def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -3,7 +3,7 @@ vectorized RegexParser (P1).
 
 The reference has only raw regex parsing (internal/parser/regex/regex.go);
 grok is the north star's named extension ("vectorized grok/regex parsing").
-A grok expression compiles to a single Python/RE2-compatible regex with
+A grok expression compiles to a single RE2 (Go regexp syntax) regex with
 named capture groups, then rides the existing Arrow-batched parse kernel —
 no new execution machinery.
 

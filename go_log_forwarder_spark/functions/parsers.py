@@ -15,11 +15,14 @@ Reference semantics:
   the FIRST match wins; if none matches the raw row continues down the
   pipeline with NULL parsed data.
 
-Spark realization: the json path is pure Catalyst (``from_json``); the regex
-path is a vectorized pandas UDF (Arrow-batched — the only Python in the hot
-path, looping only inside the UDF body over a pandas Series); the chain is a
-``coalesce`` over per-parser struct results, which Catalyst folds into one
-projection.
+Spark realization: every parser exposes one method,
+``parse(raw) -> (parsed, canonical, matched)``, and the chain owns time
+extraction. The json path is pure Catalyst (``from_json`` plus a variant
+round-trip for the canonical). The regex path is ONE vectorized kernel: a
+pandas UDF whose body hands the whole Arrow batch to RE2 ``extract_regex``
+(Go's regexp syntax, so patterns mean what they mean in the reference) and
+returns the named groups plus the canonical text — the only Python in the
+hot path. The chain is a ``coalesce`` over per-parser candidate structs.
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .filters import canonical_json_from_raw
 
 # Explicit Go-layout -> Spark-pattern overrides. These take precedence over
 # the token compiler below (they pin behavior the round-1 suite verified);
@@ -237,146 +242,125 @@ class JsonParser:
     time_key: str = ""
     time_format: str = GO_RFC3339
 
-    def parsed_col(self, raw: Column) -> Column:
+    def parse(self, raw: Column) -> tuple[Column, Column, Column]:
+        """``(parsed, canonical, matched)`` for the raw line."""
         # from_json returns NULL for malformed input and for non-object JSON
         # when the target type is a map — matching json.Unmarshal into
         # map[string]any failing on arrays/scalars.
-        return F.from_json(raw, PARSED_TYPE)
-
-    def matched_col(self, raw: Column, parsed: Column) -> Column:
+        parsed = F.from_json(raw, PARSED_TYPE)
+        # Go json.Marshal(json.Unmarshal(raw)): variant round-trip gives
+        # sorted keys + preserved types (see functions/filters.py docstring).
+        canonical = canonical_json_from_raw(raw)
         # Go json.Unmarshal("null", &map) SUCCEEDS with a nil map
         # (json.go:44-49), so a bare 'null' line (mod JSON whitespace:
         # space/\t/\n/\r) is a json MATCH with NULL parsed data — it must
         # not fall through to later parsers in a chain.
-        return parsed.isNotNull() | raw.rlike("^[ \\t\\r\\n]*null[ \\t\\r\\n]*$")
-
-    def canonical_col(self, raw: Column, parsed: Column) -> Column:
-        # Go json.Marshal(json.Unmarshal(raw)): variant round-trip gives
-        # sorted keys + preserved types (see functions/filters.py docstring).
-        from .filters import canonical_json_from_raw
-
-        return canonical_json_from_raw(raw)
-
-    def time_col(self, parsed: Column) -> Column | None:
-        if self.time_key and self.time_format:
-            return extract_time_col(parsed, self.time_key, self.time_format)
-        return None
+        matched = parsed.isNotNull() | raw.rlike("^[ \\t\\r\\n]*null[ \\t\\r\\n]*$")
+        return parsed, canonical, matched
 
 
-def _re2_extractable(pattern: str, group_names: list[str]) -> bool:
-    """True when Arrow's C++ RE2 extract_regex can run this pattern: RE2
-    syntax (no backrefs/lookaround), all capturing groups NAMED, at least
-    one group. RE2 is Go's regexp engine, so reference-legal patterns
-    always qualify — the Python fallback only covers python-only syntax or
-    unnamed capturing groups."""
-    if not group_names:
-        return False
+def _uncapture_unnamed(pattern: str) -> str:
+    """Rewrite each unnamed capturing ``(`` of an RE2 pattern to ``(?:``.
+
+    Go's regex parser ignores unnamed groups (only named ones reach the
+    map, regex.go:64-79) and Arrow's ``extract_regex`` rejects them, so
+    they become non-capturing. The scan follows RE2 syntax: ``\\x``
+    escapes and ``\\Q...\\E`` literals are copied as-is, and so are
+    character classes (a ``]`` first in the class is literal, ``[:alpha:]``
+    does not end it)."""
+    out, i, n = [], 0, len(pattern)
+    while i < n:
+        c = pattern[i]
+        if c == "\\":
+            if pattern.startswith("\\Q", i):
+                e = pattern.find("\\E", i + 2)
+                j = n if e < 0 else e + 2
+            else:
+                j = i + 2
+        elif c == "[":
+            j = i + 1 + pattern.startswith("^", i + 1)
+            j += pattern.startswith("]", j)
+            while j < n and pattern[j] != "]":
+                e = pattern.find(":]", j + 2) if pattern.startswith("[:", j) else -1
+                j = e + 2 if e >= 0 else j + 1 + (pattern[j] == "\\")
+            j += 1
+        elif c == "(" and not pattern.startswith("?", i + 1):
+            out.append("(?:")
+            i += 1
+            continue
+        else:
+            j = i + 1
+        out.append(pattern[i:j])
+        i = j
+    return "".join(out)
+
+
+def _re2_compile(pattern: str) -> tuple[str, list[str]]:
+    """``(RE2 pattern, named groups in group order)``, compiled by the same
+    engine the kernel runs (Arrow's RE2, Go's regexp syntax). Raises
+    ``ValueError`` for syntax RE2 rejects — lookaround, backrefs — as
+    ``regexp.Compile`` fails Init (regex.go:32-35)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    re2 = _uncapture_unnamed(pattern)
     try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        pc.extract_regex(pa.array([], type=pa.string()), pattern=pattern)
-        return True
-    except Exception:  # noqa: BLE001 — any rejection routes to the fallback
-        return False
+        res = pc.extract_regex(pa.array([], type=pa.string()), pattern=re2)
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"invalid regex {pattern!r}: {e}") from e
+    return re2, [f.name for f in res.type]
 
 
-def _compile_regex_struct_udf(
-    pattern: str, group_names: list[str], with_canonical: bool = False
-):
-    """RE2 fast path: the whole batch goes through Arrow's C++
-    extract_regex — ZERO per-row Python. Returns struct<name:string,...>
-    whose fields are all-NULL exactly when the row did not match (RE2
-    non-participating groups yield "", never NULL — Go regex.go:66-77
-    parity by construction).
+def _compile_regex_struct_udf(pattern: str, group_names: list[str], allow_empty: bool):
+    """The regex kernel: the whole batch goes through Arrow's C++ RE2
+    ``extract_regex`` — ZERO per-row Python. Returns
+    struct<name:string,..., __canon:string>. ``__canon`` is NULL exactly
+    when the row did not match (the extract struct's validity); on a match
+    every group is a string (RE2 non-participating groups yield "", never
+    NULL — Go regex.go:66-77 parity by construction).
 
-    ``with_canonical`` (round 7) additionally emits the Go
-    ``json.Marshal(map[string]string)`` text as a ``__canon`` field,
-    built INSIDE the kernel with vectorized replace/join: the post-UDF
-    projection that previously assembled it from the map is not
-    whole-stage-codegen'd, so its 5-regexp escape chain per key and value
-    ran interpreted per row. Key order is the static sort of the group
-    names (ASCII, same order Catalyst's array_sort(map_entries) yields);
-    escapes and quoting match filters._escape_json_string exactly;
-    no-match rows emit NULL."""
-    from pyspark.sql import types as T
-
-    fields = [T.StructField(n, T.StringType()) for n in group_names]
-    if with_canonical:
-        fields.append(T.StructField("__canon", T.StringType()))
-    struct_type = T.StructType(fields)
+    ``__canon`` is the Go ``json.Marshal(map[string]string)`` text of the
+    parsed map, built INSIDE the kernel with vectorized replace/join: a
+    post-UDF projection is not whole-stage-codegen'd, so its 5-regexp
+    escape chain per key and value would run interpreted per row. Key
+    order is the static sort of the group names (ASCII, same order
+    Catalyst's array_sort(map_entries) yields); escapes and quoting match
+    filters._escape_json_string exactly; ``allow_empty=False`` leaves out
+    the entries whose value is "" (regex.go:73-76)."""
+    struct_type = T.StructType(
+        [T.StructField(n, T.StringType()) for n in [*group_names, "__canon"]]
+    )
 
     @F.pandas_udf(struct_type)
     def parse(raw: pd.Series) -> pd.DataFrame:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        arr = pa.Array.from_pandas(raw, type=pa.string())
-        res = pc.extract_regex(arr, pattern=pattern)
+        def esc(c):
+            for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                         ("\t", "\\t"), ("\r", "\\r")):
+                c = pc.replace_substring(c, pattern=a, replacement=b)
+            return c
+
+        res = pc.extract_regex(pa.Array.from_pandas(raw, type=pa.string()), pattern=pattern)
         # flatten() ANDs child validity with the struct's: no-match rows
         # come out as NULL in every field
-        cols = res.flatten()
-        out = {n: c.to_pandas() for n, c in zip(group_names, cols)}
-        if with_canonical:
-            def esc(c):
-                for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
-                             ("\t", "\\t"), ("\r", "\\r")):
-                    c = pc.replace_substring(c, pattern=a, replacement=b)
-                return c
-
-            by_name = dict(zip(group_names, cols))
-            parts = []
-            for i, n in enumerate(sorted(group_names)):
-                # '{"k":"' for the first entry, '","k":"' after (closing
-                # the previous value's quote before the comma)
-                parts.append(pa.scalar(('","' if i else '{"') + n + '":"'))
-                parts.append(esc(by_name[n]))
-            parts.append(pa.scalar('"}'))
-            out["__canon"] = pc.binary_join_element_wise(
-                *parts, pa.scalar(""), null_handling="emit_null"
-            ).to_pandas()
+        by_name = dict(zip(group_names, res.flatten()))
+        # one ',"k":"v"' part per entry ("" for a dropped empty value);
+        # joined, the leading comma dropped and wrapped in {}
+        parts = []
+        for n in sorted(group_names):
+            part = pc.binary_join_element_wise(',"' + n + '":"', esc(by_name[n]), '"', "")
+            if not allow_empty:
+                part = pc.if_else(pc.equal(by_name[n], ""), "", part)
+            parts.append(part)
+        body = pc.binary_join_element_wise(*parts, "") if parts else pa.scalar("")
+        canon = pc.binary_join_element_wise("{", pc.utf8_slice_codeunits(body, 1), "}", "")
+        out = {n: c.to_pandas() for n, c in by_name.items()}
+        out["__canon"] = pc.if_else(
+            res.is_valid(), canon, pa.scalar(None, pa.string())
+        ).to_pandas()
         return pd.DataFrame(out)
-
-    return parse
-
-
-def _compile_regex_parse_udf(pattern: str, allow_empty: bool):
-    """Build the vectorized regex-parse pandas UDF (Python-re fallback).
-
-    One precompiled regex per executor (closure), applied per Arrow batch.
-    Go parity notes:
-    - ``FindStringSubmatch`` is an unanchored leftmost search == ``re.search``.
-    - Go returns "" for a non-participating group (regex.go:66-77 stores it);
-      Python gives None -> normalized to "".
-    - ``AllowEmpty=false`` drops keys whose value is "" (regex.go:73-76).
-    - Compiled with ``re.ASCII`` so ``\\d``/``\\w``/``\\s``/``\\b`` are
-      ASCII-only, exactly like RE2/Go (ADVICE r3): parse results must not
-      depend on which kernel ``_re2_extractable`` selects. Go's regexp
-      needs ``\\p{...}`` for Unicode classes; so does this fallback (via
-      explicit char classes — Python re has no ``\\p``).
-    """
-    compiled = re.compile(pattern, re.ASCII)
-    group_names = [g for g in compiled.groupindex]
-
-    @F.pandas_udf(PARSED_TYPE)
-    def parse(raw: pd.Series) -> pd.Series:
-        out = []
-        for s in raw:
-            if s is None:
-                out.append(None)
-                continue
-            m = compiled.search(s)
-            if m is None:
-                out.append(None)
-                continue
-            d = {}
-            for name in group_names:
-                value = m.group(name)
-                value = "" if value is None else value
-                if allow_empty or value != "":
-                    d[name] = value
-            out.append(d)
-        return pd.Series(out)
 
     return parse
 
@@ -385,10 +369,11 @@ def _compile_regex_parse_udf(pattern: str, allow_empty: bool):
 class RegexParser:
     """regex parser (regex.go:25-86): named-group extraction into a map.
 
-    Matching semantics are RE2/Go on BOTH kernels: the fast path is Arrow's
-    RE2 ``extract_regex``; the Python-re fallback compiles with
-    ``re.ASCII`` so ``\\d``/``\\w``/``\\s``/``\\b`` are ASCII-only either
-    way (ADVICE r3 — results never depend on kernel selection)."""
+    One engine end to end: the pattern is validated, its group names read
+    and every row matched by Arrow's RE2 ``extract_regex`` — RE2 is Go's
+    regexp syntax, so ``\\d``/``\\w``/``\\s``/``\\b`` are ASCII-only,
+    ``\\p{L}`` works and ``$`` does not match before a trailing newline,
+    exactly as in Go (ADVICE r3)."""
 
     pattern: str
     name: str = "regex"
@@ -397,63 +382,32 @@ class RegexParser:
     time_format: str = GO_RFC3339
 
     def __post_init__(self) -> None:
-        re.compile(self.pattern)  # Init-time validation (regex.go:32-35)
+        _re2_compile(self.pattern)  # Init-time validation (regex.go:32-35)
 
-    def parsed_col(self, raw: Column) -> Column:
-        group_names = [g for g in re.compile(self.pattern).groupindex]
-        if _re2_extractable(self.pattern, group_names):
-            # RE2 fast path (~5x): C++ extract_regex into a struct, then a
-            # pure-Catalyst struct->map conversion. Matched rows never have
-            # NULL fields ("" for non-participating groups), so any-null =
-            # no-match -> NULL map, exactly like the fallback kernel.
-            s = _compile_regex_struct_udf(self.pattern, group_names)(raw)
-            entries = F.map_from_arrays(
-                F.array(*[F.lit(n) for n in group_names]),
-                F.array(*[s.getField(n) for n in group_names]),
-            )
-            if not self.allow_empty:
-                entries = F.map_filter(entries, lambda _k, v: v != "")
-            return F.when(s.getField(group_names[0]).isNotNull(), entries)
-        return _compile_regex_parse_udf(self.pattern, self.allow_empty)(raw)
-
-    def parsed_and_canonical(self, raw: Column) -> tuple[Column, Column] | None:
-        """Fused RE2 path (round 7): one kernel evaluation yields BOTH the
-        parsed map and the canonical Go-marshal text (see
-        _compile_regex_struct_udf with_canonical). Only offered when the
-        kernel applies and ``allow_empty`` is on (empty-dropping canonical
-        depends on per-row membership — the Catalyst map build handles
-        that); callers fall back to parsed_col + canonical_col otherwise.
-        Identical UDF expressions are deduplicated at extraction, so the
-        kernel still runs once per row."""
-        group_names = [g for g in re.compile(self.pattern).groupindex]
-        if not self.allow_empty or not _re2_extractable(self.pattern, group_names):
-            return None
-        s = _compile_regex_struct_udf(
-            self.pattern, group_names, with_canonical=True
-        )(raw)
+    def parse(self, raw: Column) -> tuple[Column, Column, Column]:
+        """``(parsed, canonical, matched)`` from ONE kernel evaluation:
+        the named groups become the map (a pure-Catalyst struct->map
+        conversion), ``__canon`` is the canonical and its NULL-ness the
+        match flag."""
+        pattern, group_names = _re2_compile(self.pattern)
+        s = _compile_regex_struct_udf(pattern, group_names, self.allow_empty)(raw)
+        canonical = s.getField("__canon")
+        matched = canonical.isNotNull()
         entries = F.map_from_arrays(
             F.array(*[F.lit(n) for n in group_names]),
             F.array(*[s.getField(n) for n in group_names]),
-        )
-        matched = s.getField(group_names[0]).isNotNull()
-        return F.when(matched, entries), F.when(matched, s.getField("__canon"))
-
-    def canonical_col(self, raw: Column, parsed: Column) -> Column:
-        # regex output is map[string]string in Go — all values quoted.
-        from .filters import canonical_json_of_string_map
-
-        return canonical_json_of_string_map(parsed)
-
-    def time_col(self, parsed: Column) -> Column | None:
-        if self.time_key and self.time_format:
-            return extract_time_col(parsed, self.time_key, self.time_format)
-        return None
+        ).cast(PARSED_TYPE)  # with no named groups the arrays are array<void>
+        if not self.allow_empty:
+            entries = F.map_filter(entries, lambda _k, v: v != "")
+        return F.when(matched, entries), canonical, matched
 
 
 @dataclass
 class ParserChain:
     """First-match-wins parser chain (engine.go:93-97).
 
+    Every parser exposes ``parse(raw) -> (parsed, canonical, matched)``
+    plus ``name``, ``time_key`` and ``time_format``.
     ``apply(df, raw_col, ingest_time_col)`` adds:
     - ``parsed`` map<string,string> (NULL when no parser matched — the row
       is KEPT, matching the reference),
@@ -505,27 +459,12 @@ class ParserChain:
                 raw = F.when(prev.isNull(), F.col(raw_col))
             else:
                 raw = F.col(raw_col)
-            fused = (
-                p.parsed_and_canonical(raw)
-                if hasattr(p, "parsed_and_canonical")
-                else None
-            )
-            if fused is not None:
-                parsed, canonical = fused
-            else:
-                parsed = p.parsed_col(raw)
-                canonical = p.canonical_col(raw, parsed)
-            tcol = p.time_col(parsed)
-            event_time = (
-                F.coalesce(tcol, F.col(ingest_time_col))
-                if tcol is not None
-                else F.col(ingest_time_col)
-            )
-            matched = (
-                p.matched_col(raw, parsed)
-                if hasattr(p, "matched_col")
-                else parsed.isNotNull()
-            )
+            parsed, canonical, matched = p.parse(raw)
+            event_time = F.col(ingest_time_col)
+            if p.time_key and p.time_format:
+                event_time = F.coalesce(
+                    extract_time_col(parsed, p.time_key, p.time_format), event_time
+                )
             candidate = F.when(
                 matched,
                 F.struct(

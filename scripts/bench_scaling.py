@@ -82,7 +82,7 @@ def flagship_job(spark):
     # stage 2: vectorized regex parse (pandas UDF — the custom kernel):
     # extract doc_id + source from the raw line via named groups
     rx = RegexParser(pattern=r'"doc_id":"(?P<doc_id>[^"]+)".*"source":"(?P<src>[^"]+)"')
-    parsed = parsed.withColumn("rx", rx.parsed_col(F.col("raw"))).drop("raw")
+    parsed = parsed.withColumn("rx", rx.parse(F.col("raw"))[0]).drop("raw")
     parsed = parsed.withColumn("rx_ok", F.col("rx")["doc_id"] == F.col("doc_id")).drop("rx")
     # stage 3: broadcast enrichment on source
     lookup = spark.createDataFrame(

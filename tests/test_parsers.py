@@ -79,6 +79,11 @@ def test_regex_init_validation():
     # regex_test.go:50-56: invalid pattern fails Init
     with pytest.raises(Exception):
         RegexParser(pattern="[invalid")
+    # Python-only syntax (lookaround, backrefs) fails Init too: RE2/Go
+    # reject it
+    for pattern in (r"(?P<a>x)(?=y)", r"(?P<a>x)(?!y)", r"(?P<a>x)\1"):
+        with pytest.raises(ValueError):
+            RegexParser(pattern=pattern)
     with pytest.raises(ValueError):
         go_layout_to_spark("invalid")
 
@@ -378,29 +383,66 @@ def test_go_layout_compiler_roundtrip(spark):
 
 
 def test_regex_ascii_classes_kernel_independent(spark):
-    # ADVICE r3: \d must be ASCII-only (RE2/Go semantics) in BOTH kernels.
-    # Arabic-Indic digits must not match, whichever kernel runs.
-    from go_log_forwarder_spark.functions.parsers import (
-        RegexParser,
-        _compile_regex_parse_udf,
-        _re2_extractable,
-    )
-
+    # ADVICE r3: \d must be ASCII-only (RE2/Go semantics). One RE2 kernel
+    # runs every pattern, so Arabic-Indic digits never match.
     pat = r"n=(?P<n>\d+)"
-    rows = [("n=42",), ("n=١٢٣",)]  # ١٢٣
-    df = spark.createDataFrame(rows, "raw string")
+    rows = _run_chain(spark, ["n=42", "n=١٢٣"], [RegexParser(pattern=pat)])
+    got = {raw: r["parsed"] for raw, r in rows.items()}
+    assert got == {"n=42": {"n": "42"}, "n=١٢٣": None}
 
-    assert _re2_extractable(pat, ["n"])  # default route is the RE2 kernel
-    re2 = {
-        r["raw"]: r["p"]
-        for r in df.select(
-            "raw", RegexParser(pattern=pat).parsed_col(F.col("raw")).alias("p")
-        ).collect()
-    }
-    fallback = {
-        r["raw"]: r["p"]
-        for r in df.select(
-            "raw", _compile_regex_parse_udf(pat, allow_empty=True)(F.col("raw")).alias("p")
-        ).collect()
-    }
-    assert re2 == fallback == {"n=42": {"n": "42"}, "n=١٢٣": None}
+
+def test_regex_unicode_property_class(spark):
+    # Go's regexp (and RE2) accept \p{L}; Python's re does not
+    p = RegexParser(pattern=r"(?P<w>\p{L}+)")
+    rows = _run_chain(spark, ["αβγ x"], [p])
+    assert rows["αβγ x"]["parsed"] == {"w": "αβγ"}
+
+
+def test_regex_dollar_does_not_match_before_trailing_newline(spark):
+    # RE2/Go: $ (no multi-line flag) matches only at the very end; Python's
+    # re also matches before a final "\n". tcp chunks keep their newlines.
+    p = RegexParser(pattern=r"^(?P<a>x)(y)?$")
+    rows = _run_chain(spark, ["xy\n", "xy"], [p])
+    assert rows["xy\n"]["parsed"] is None
+    assert rows["xy\n"]["parser"] is None
+    assert rows["xy"]["parsed"] == {"a": "x"}  # the unnamed group is not a key
+
+
+@pytest.mark.parametrize(
+    "pattern,rewritten",
+    [
+        (r"(x)(?P<a>y)", r"(?:x)(?P<a>y)"),
+        (r"(?P<a>(b))", r"(?P<a>(?:b))"),
+        (r"(?i)(a)", r"(?i)(?:a)"),
+        (r"\(x\)", r"\(x\)"),
+        (r"[(]x[)]", r"[(]x[)]"),
+        (r"[]()](y)", r"[]()](?:y)"),
+        (r"[^]()](y)", r"[^]()](?:y)"),
+        (r"[[:alpha:](](z)", r"[[:alpha:](](?:z)"),
+        (r"[\]((](q)", r"[\]((](?:q)"),
+        (r"\Q(\E(?P<a>x)", r"\Q(\E(?P<a>x)"),
+        (r"\Q((", r"\Q(("),
+    ],
+)
+def test_regex_unnamed_group_rewrite(pattern, rewritten):
+    from go_log_forwarder_spark.functions.parsers import _uncapture_unnamed
+
+    assert _uncapture_unnamed(pattern) == rewritten
+
+
+def test_regex_unnamed_groups_dropped(spark):
+    # Go's map holds named groups only; escaped parens, parens in a class
+    # and \Q(\E are literals, not groups
+    p = RegexParser(pattern=r"^(\w+) \((?P<a>[(]\d+[)])\) \Q(\E(?P<b>[]()]+)$")
+    rows = _run_chain(spark, ["lvl ((42)) ()]("], [p])
+    assert rows["lvl ((42)) ()]("]["parsed"] == {"a": "(42)", "b": ")]("}
+
+
+def test_regex_no_named_groups(spark):
+    # a match with no named groups is an empty map, marshalled as {}
+    rows = _run_chain(spark, ["ERROR x", "INFO y"], [RegexParser(pattern=r"^ERROR")])
+    assert rows["ERROR x"]["parsed"] == {}
+    assert rows["ERROR x"]["canonical"] == "{}"
+    assert rows["ERROR x"]["parser"] == "regex"
+    assert rows["INFO y"]["parsed"] is None
+    assert rows["INFO y"]["canonical"] == "null"

@@ -136,8 +136,8 @@ def test_with_distinct_count_parity(spark, toks_df):
 def test_fused_regex_canonical_parity(spark):
     # r7: the RE2 kernel's in-kernel canonical must equal the Catalyst
     # map-marshal (filters.canonical_json_of_string_map) byte-for-byte —
-    # multiple groups (quote between entries!), escapes, empty values,
-    # no-match rows.
+    # multiple groups (quote between entries!), escapes, empty values
+    # kept or dropped, no named groups, no-match rows.
     import datetime
 
     from go_log_forwarder_spark.functions.filters import canonical_json_of_string_map
@@ -147,27 +147,38 @@ def test_fused_regex_canonical_parity(spark):
         ('ERROR event "quoted"\\slash', 1),
         ("INFO x", 2),
         ("~~no match~~", 3),
-        ("WARN ", 4),  # .+ fails on empty message -> no match
+        ("WARN ", 4),  # empty message: kept or dropped by allow_empty
     ]
     df = spark.createDataFrame(
         [(r, i, datetime.datetime(2024, 1, 1)) for r, i in rows],
         "raw string, i long, ingest_time timestamp",
     )
-    p = RegexParser(pattern=r"^(?P<level>[A-Z]+)\s(?P<message>.*)$")
-    out = ParserChain([p]).apply(df)
-    got = {
-        r["i"]: (r["canonical"], canonical_json_of_string_map(F.lit(None)))
-        for r in out.collect()
+    two_groups = r"^(?P<level>[A-Z]+)\s(?P<message>.*)$"
+    expected = {
+        (two_groups, True): '{"level":"WARN","message":""}',
+        (two_groups, False): '{"level":"WARN"}',
+        (r"^[A-Z]+\s", True): "{}",  # no named groups: '{}' on a match
     }
-    jvm = {
-        r["i"]: r["c"]
-        for r in out.select(
-            "i", F.coalesce(canonical_json_of_string_map(F.col("parsed")), F.lit("null")).alias("c")
-        ).collect()
-    }
-    assert {i: c for i, (c, _) in got.items()} == jvm
-    assert jvm[1] == '{"level":"ERROR","message":"event \\"quoted\\"\\\\slash"}'
-    assert jvm[3] == "null"
+    for (pattern, allow_empty), warn in expected.items():
+        out = ParserChain([RegexParser(pattern=pattern, allow_empty=allow_empty)]).apply(df)
+        got = {
+            r["i"]: (r["canonical"], r["jvm"])
+            for r in out.select(
+                "i",
+                "canonical",
+                F.coalesce(
+                    canonical_json_of_string_map(F.col("parsed")), F.lit("null")
+                ).alias("jvm"),
+            ).collect()
+        }
+        kernel = {i: c for i, (c, _) in got.items()}
+        jvm = {i: j for i, (_, j) in got.items()}
+        assert kernel == jvm, (pattern, allow_empty)
+        assert jvm[3] == "null" and jvm[4] == warn
+        if pattern == two_groups:
+            assert jvm[1] == '{"level":"ERROR","message":"event \\"quoted\\"\\\\slash"}'
+        else:
+            assert jvm[1] == jvm[2] == "{}"
 
 
 def test_int_dot_arrow_parity(spark):
