@@ -542,10 +542,11 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       covered by any 5-gram occurring >= 2 times anywhere (v1..v4 =
       span_start, span_end, span_len, n_shingles); half the corpus flows
       through the INCREMENTAL snapshot-store index (see _span_index_build).
-    - kind='clean': the APPLY half (remove_repeated_spans): every covered
-      word dropped via a pure Catalyst two-arg HOF filter + EXISTS over the
-      doc's collected span array (v1 = n_kept, v2 = n_removed, v3 = hex60
-      of the cleaned text — pins every surviving word and its order).
+    - kind='clean': the APPLY half (remove_repeated_spans): the doc's
+      collected spans are overlap-merged and the words array keeps only
+      the slices between them, re-joined with " " (v1 = n_kept,
+      v2 = n_removed, v3 = hex60 of the cleaned text — pins every
+      surviving word and its order).
     - kind='tok_span': the same find over the TOKENS table's int arrays
       (token_substring_spans; doc_id = the numeric doc suffix) — the
       synthetic LCG corpus genuinely repeats 5-grams across shifted
@@ -553,10 +554,12 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     - kind='tok_clean': the token APPLY (v3 = hex60 of the surviving token
       ids joined with ',' — pins every kept token and its order).
 
-    Distributed shape: shingle positions (map-side) -> fingerprint-
-    partitioned groupBy index -> semi-join back -> per-doc islands window;
-    the cleaners re-join the tiny span relations, and neither corpus text
-    nor token arrays are ever exploded."""
+    Distributed shape: a fingerprint-partitioned groupBy builds the dup-
+    gram index; words (as per-position hex60 gram hashes) and tokens then
+    go through ONE span core — an Arrow probe-and-islands kernel under the
+    broadcast gate, a semi-join + per-doc islands window above it; the
+    cleaners re-join the tiny span relations, and neither corpus text nor
+    token arrays are ever exploded."""
     from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
 
     docs = _documents(spark, sf_dir)

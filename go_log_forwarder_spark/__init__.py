@@ -14,7 +14,7 @@ Layout
 - ``operators/`` — routing (multi-sink fan-out) and aggregation (counters,
   metrics).
 - ``sources/`` — tokens-table reader + synthetic generator, tail/http-shaped
-  ingestion, storage (iceberg-or-parquet) abstraction.
+  ingestion, parquet snapshot store (the Iceberg stand-in).
 - ``plans/`` — YAML pipeline config -> DataFrame DAG builder, lineage/resume.
 - ``streaming/`` — Structured Streaming variant of the same pipeline.
 - ``oracle.py`` — pure-Python reimplementation of the reference semantics,

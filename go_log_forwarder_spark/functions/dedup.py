@@ -1,6 +1,7 @@
 """Deduplication operators for training-data pipelines: exact, n-gram
-Jaccard, MinHash+LSH, SimHash. (SURVEY-mandated additions beyond the
-reference's operator set; first-class graded components.)
+Jaccard, MinHash+LSH, SimHash, exact-substring spans. (SURVEY-mandated
+additions beyond the reference's operator set; first-class graded
+components.)
 
 Scale design (the point is 100 TB, not 500 rows):
 - exact: hash-groupBy on md5(text) — one shuffle on a short key, never on
@@ -13,6 +14,13 @@ Scale design (the point is 100 TB, not 500 rows):
   are verified with exact jaccard. This is shingle→minhash→band→bucket-join.
 - SimHash: pure map-side signature; near-dup = signature distance, here
   materialized per-doc (pairing strategies are a downstream join choice).
+- substring spans: word and token spans share ONE span core
+  (:func:`_find_spans`). A document is a per-position key array — token
+  ids, or the hex60 hashes of its word n-grams as one-value grams — and
+  the core finds its duplicated grams against a dup-key set built by one
+  partial-agg shuffle: an Arrow probe-and-islands kernel when the set
+  broadcasts, positions ⋉ dup set + a per-document window when it does
+  not. One gap-slice cleaner applies the spans to either array.
 
 Portability: hashes are md5-hex-prefix ints (see textstats.hex60_*), so the
 DuckDB oracle reproduces every signature bit-for-bit.
@@ -20,7 +28,7 @@ DuckDB oracle reproduces every signature bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import hex60_col, hex60_sql, micro_col, words_col, words_sql
@@ -212,8 +220,8 @@ def lsh_index_increment(store, batch: DataFrame,
                         meta: dict | None = None) -> int:
     """Incremental cross-run dedup, write side (VERDICT r4 item 2): MinHash-
     band ONLY the new batch and append the band relation as one atomic
-    snapshot of the persisted index (``sources.storage`` snapshot store /
-    Iceberg). At 100 TB the corpus is never re-signatured per increment —
+    snapshot of the persisted index (the ``sources.storage`` snapshot
+    store). At 100 TB the corpus is never re-signatured per increment —
     each run pays for its own batch; everything older is parquet on disk.
     Returns the committed snapshot id.
 
@@ -446,6 +454,19 @@ def simhash_pairs_sql(
     """
 
 
+def _word_gram_hashes(ws: Column, n: int) -> Column:
+    """hex60 hash of every word ``n``-gram of the word array ``ws``, in
+    start order; empty when ``ws`` is shorter than ``n`` (no n-gram
+    exists). The key the DuckDB oracles group on."""
+    return F.when(
+        F.size(ws) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(ws) - n + 1),
+            lambda i: hex60_col(F.array_join(F.slice(ws, i, n), " ")),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+
+
 DECON_NGRAM = 8  # benchmark-decontamination shingle width (words)
 
 
@@ -453,16 +474,9 @@ def _ngram_hashes(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFram
     """(id, h): distinct hex60 hashes of each doc's word n-grams. Docs
     shorter than n words contribute nothing (no n-gram exists)."""
     with_words = df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))
-    grams = F.when(
-        F.size(F.col("_ws")) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(F.col("_ws")) - n + 1),
-            lambda i: hex60_col(
-                F.array_join(F.slice(F.col("_ws"), i, n), " ")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return with_words.select("id", F.explode(grams).alias("h")).distinct()
+    return with_words.select(
+        "id", F.explode(_word_gram_hashes(F.col("_ws"), n)).alias("h")
+    ).distinct()
 
 
 def _ngram_hashes_sql(table: str, n: int, text_col: str, id_col: str) -> str:
@@ -532,23 +546,29 @@ def decontaminate_sql(
 SPAN_NGRAM = 5  # shingle width (words) for exact-substring span dedup
 
 
+def _word_keys(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    """(id, _ks): one row per document, ``_ks`` the per-position word
+    ``n``-gram hashes — the span core's input for word spans (each hash is
+    a one-value gram)."""
+    ws = df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))
+    return ws.select("id", _word_gram_hashes(F.col("_ws"), n).alias("_ks"))
+
+
 def shingle_positions(
     df: DataFrame, n: int = SPAN_NGRAM, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, pos, h): hex60 hash of each word ``n``-gram WITH its 1-based
     start position — the position-keeping sibling of ``_ngram_hashes``
-    (which dedups to distinct hashes for decontamination). Map-side only."""
+    (which dedups to distinct hashes for decontamination). Map-side only;
+    the word spans count their dup index off this relation. It explodes
+    the gram expression itself, not :func:`_word_keys`' projected array:
+    exploding the projected array measured 7.2 s against 1.1 s for this
+    count pass at sf0.1, since Spark infers a ``size(...) > 0`` filter
+    under the Generate and re-runs every md5 for it."""
     with_words = df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))
-    grams = F.when(
-        F.size(F.col("_ws")) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(F.col("_ws")) - n + 1),
-            lambda i: hex60_col(F.array_join(F.slice(F.col("_ws"), i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return with_words.select("id", F.posexplode(grams).alias("pos0", "h")).select(
-        "id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "h"
-    )
+    return with_words.select(
+        "id", F.posexplode(_word_gram_hashes(F.col("_ws"), n)).alias("pos0", "h")
+    ).select("id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "h")
 
 
 def substring_spans(
@@ -562,20 +582,24 @@ def substring_spans(
     covered ranges merge into maximal removal spans.
 
     Distributed shape (100 TB story):
-    1. shingle positions (map-side explode, no shuffle);
-    2. the fingerprint-partitioned index: ONE groupBy(h) partial-agg
-       shuffle keeps hashes with >= 2 occurrences — the index relation is
-       tiny relative to the corpus (only repeated shingles survive);
-    3. a left-semi join back tags duplicated positions;
-    4. span merge is a per-document window (lag + running sum islands) —
-       partition = one document, never a corpus-wide sort.
+    1. the fingerprint-partitioned index: ONE groupBy(h) partial-agg
+       shuffle over the map-side :func:`shingle_positions` keeps hashes
+       with >= 2 occurrences — only repeated shingles survive;
+    2. the span core (:func:`_find_spans`) with each document's per-
+       position gram hashes as one-value grams (gram width 1, span width
+       ``n``): the same probe-and-islands kernel the token spans use, or
+       the positions ⋉ dup-set + per-document window above the gate.
 
     Two shingle starts p < q belong to one span iff q - p <= n (their
     covered word ranges [p, p+n-1], [q, q+n-1] overlap or touch), so the
     output spans are exactly the maximal unions of covered words.
     Returns (doc_id, span_start, span_end, span_len, n_shingles) with
     1-based inclusive word indexes."""
-    return _global_dup_spans(shingle_positions(df, n, text_col, id_col), n)
+    counts = shingle_positions(df, n, text_col, id_col).groupBy("h").agg(
+        F.count(F.lit(1)).alias("n_occ")
+    )
+    dup = counts.filter(F.col("n_occ") >= 2).select(F.col("h").alias("h0"))
+    return _find_spans(_word_keys(df, n, text_col, id_col), 1, n, dup)
 
 
 DUP_BROADCAST_ROWS = 2_000_000  # ~48 MB at 24 B/key: above this the dup-hash
@@ -585,163 +609,142 @@ DUP_BROADCAST_ROWS = 2_000_000  # ~48 MB at 24 B/key: above this the dup-hash
 # as similarity.SEED_BROADCAST_ROWS.
 
 
-def _global_dup_spans(sp: DataFrame, n: int, counts: DataFrame | None = None) -> DataFrame:
-    """Steps 2-4 of the span-dedup shape over a (id, pos, h) shingle
-    relation: the fingerprint-partitioned >= 2 count index, the semi-join
-    back, and the per-document islands merge — shared by the word
-    (:func:`substring_spans`) and token (:func:`token_substring_spans`)
-    variants, which differ only in how shingles are produced.
+def _find_spans(keyed: DataFrame, width: int, n: int, dup: DataFrame) -> DataFrame:
+    """The one span core, shared by word and token spans. ``keyed`` is
+    (id, _ks): one row per document, ``_ks`` its per-position key array;
+    a gram is ``width`` consecutive keys (tokens: width n; words: width 1
+    over the hex60 gram hashes). ``dup`` holds the grams that occur >= 2
+    times, as the packed key columns h0..h{k-1} (see :func:`_gram_keys`).
+    A position is duplicated iff its gram is in ``dup``; duplicated starts
+    p < q share a span iff q - p <= ``n``. Returns (doc_id, span_start,
+    span_end, span_len, n_shingles), 1-based inclusive.
 
-    Shape choice, measured (rounds 6-7): a window-count formulation
-    (count(*) OVER (PARTITION BY h)) computes ``sp`` once but ALWAYS
-    shuffles the full position relation by hash; a localCheckpoint of
-    ``sp`` also lost to recompute once shingle production got cheap
-    (round 7: 156 s vs 143 s at sf1.0 — materializing the position
-    relation costs more than re-deriving it). The groupBy+semi-join here
-    recomputes ``sp`` map-side for the probe, and in exchange broadcasts
-    the duplicated-hash set whenever it is small, so the corpus never
-    shuffles by hash at all. Round 7 makes that broadcast EXPLICIT and
-    count-gated: the dup set is checkpointed (it is needed twice anyway:
-    once to size it, once to join), and joins broadcast only under
-    ``DUP_BROADCAST_ROWS`` — AQE alone converts the join too late, after
-    the probe side's shuffle map stage already ran (measured 34 s of
-    wasted shuffle write at sf1.0). Above the gate the join degrades to
-    the plain shuffle semi-join, which is the 100 TB-safe fallback.
-
-    ``counts`` optionally supplies a pre-aggregated (h, n_occ) relation
-    (e.g. kernel-side partial counts summed by the JVM — see
-    :func:`token_shingle_count_partials`) so the index pass never ships
-    raw positions through an aggregation.
-
-    Islands merge: when the dup set broadcasts AND ``sp`` carries an
-    integral id, the probe side never shuffles — rows reach the join
-    map-side, doc-contiguous with ascending positions (both producers,
-    ``posexplode`` and the Arrow shingle kernel, emit a doc's grams
-    consecutively, and a broadcast hash join preserves stream order) —
-    so the merge runs in a streaming Arrow kernel with zero
-    shuffle/sort, replacing the window formulation's Exchange + per-
-    partition sort (21 s of the sf1.0 find). The kernel guards its
-    order invariant at runtime (revisited doc id or non-ascending
-    positions raise). The shuffle-join fallback keeps the window shape —
-    its shuffle destroys contiguity anyway."""
-    src = counts if counts is not None else sp.groupBy("h").agg(
-        F.count(F.lit(1)).alias("n_occ")
-    )
-    dup_h = (
-        src.filter(F.col("n_occ") >= 2)
-        .select("h")
-        .localCheckpoint(eager=True)
-    )
+    One gate: the dup set is checkpointed (it is needed twice: once to
+    size it, once to probe), and when it holds at most
+    ``DUP_BROADCAST_ROWS`` keys and the id is integral, the whole probe —
+    gram keys, membership, islands — runs in ONE Arrow kernel pass over
+    ``keyed`` (:func:`_probe_spans`): no position relation, no join, no
+    shuffle. AQE alone would convert a join too late, after the probe
+    side's shuffle map stage already ran (measured 34 s of wasted shuffle
+    write at sf1.0). Above the gate, or for a non-integral id, the
+    100 TB-safe fallback: the position relation semi-joins the dup set
+    through a plain shuffle and :func:`_spans_from_dup_positions` merges
+    per document."""
     from pyspark.sql import types as T
 
-    if dup_h.count() <= DUP_BROADCAST_ROWS:
-        dup_pos = sp.join(F.broadcast(dup_h), "h", "left_semi")
-        if isinstance(sp.schema["id"].dataType, (T.LongType, T.IntegerType)):
-            return _dup_span_islands_arrow(dup_pos, n)
-        return _spans_from_dup_positions(dup_pos, n)
-    return _spans_from_dup_positions(sp.join(dup_h, "h", "left_semi"), n)
+    dup = dup.localCheckpoint(eager=True)
+    if (
+        isinstance(keyed.schema["id"].dataType, (T.LongType, T.IntegerType))
+        and dup.count() <= DUP_BROADCAST_ROWS
+    ):
+        return _probe_spans(keyed, dup, width, n)
+    pos = _gram_positions(keyed, width)
+    return _spans_from_dup_positions(pos.join(dup, dup.columns, "left_semi"), n)
 
 
-def _dup_span_islands_arrow(dup_pos: DataFrame, n: int) -> DataFrame:
-    """Streaming islands merge over an (id, pos) relation that is doc-
-    contiguous with ascending positions within every partition (see
-    :func:`_global_dup_spans` for why the broadcast path guarantees it):
-    one vectorized pass finds the gap>n breaks, emits completed spans per
-    batch and carries the open tail run across batches. Output is
-    identical to :func:`_spans_from_dup_positions` — same fields, same
-    1-based inclusive indexes — with zero shuffle and zero sort. Both
-    invariants are asserted per batch; a violation raises instead of
-    silently merging wrong islands."""
+def _gram_keys(width: int):
+    """Build the gram-key function every span kernel shares. Per Arrow list
+    array, it flattens the lists to one contiguous int64 array, indexes
+    every gram start with strided arithmetic, and packs each gram into
+    ceil(width/2) bigint key words: consecutive value pairs pack as
+    (hi << 32) | unsigned(lo), an odd tail value rides alone — exactly
+    collision-free for int32-range values (two grams share a key iff they
+    are the same value sequence), and the identity for width 1, so a
+    bigint hash passes through unchanged. All numpy, no per-row Python.
+    Returns (row_idx, pos0, hs): the input row and 0-based start of each
+    gram, and one int64 array per key word. NULL lists
+    contribute no grams; NULL VALUES are rejected loudly (the values
+    buffer is undefined there — silent garbage keys would be far worse
+    than an error)."""
+    n_words = (width + 1) // 2
 
-    NAMES = ["doc_id", "span_start", "span_end", "span_len", "n_shingles"]
+    def gram_keys(lst):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        if lst.values.null_count:
+            raise ValueError("span kernels: NULL key values unsupported")
+        lens = np.asarray(pc.fill_null(pc.list_value_length(lst), 0)).astype(np.int64)
+        offs = np.asarray(lst.offsets).astype(np.int64)
+        vals = np.asarray(lst.values).astype(np.int64)
+        m = np.maximum(lens - width + 1, 0)
+        total = int(m.sum())
+        row_idx = np.repeat(np.arange(len(lens)), m)
+        pos0 = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(m) - m, m)
+        g0 = np.repeat(offs[:-1], m) + pos0
+        hs = []
+        for k in range(n_words):
+            hi = vals[g0 + 2 * k]
+            if 2 * k + 1 < width:
+                hs.append((hi << 32) | (vals[g0 + 2 * k + 1] & np.int64(0xFFFFFFFF)))
+            else:
+                hs.append(hi)
+        return row_idx, pos0, hs
+
+    return gram_keys
+
+
+def _gram_kernel(width: int, counts: bool = False):
+    """The map-side gram pass over (id, _ks) batches: every gram as
+    (id, pos, h0..) with its 1-based start, or with ``counts=True``
+    per-batch PARTIAL key counts (h0.., n_occ) from one pyarrow hash
+    group_by. The obvious sort-then-boundary-diff alternatives were all
+    measured slower on the real dup-heavy corpus: a memcmp-order void-view
+    sort of the packed key bytes cost 2.84 s vs 1.05 s for the group_by on
+    the identical sf0.1 pass (void comparisons are per-element function
+    calls, and heavy duplication makes the comparison count worst-case),
+    and a per-key-word lexsort was ~1.5x slower still."""
+    gram_keys = _gram_keys(width)
+    key_names = [f"h{k}" for k in range((width + 1) // 2)]
 
     def kernel(it):
-        import numpy as np
         import pyarrow as pa
 
-        seen: set[int] = set()
-        cur = None  # open run: [id, start_pos, last_pos, count]
-
-        def span_of(run):
-            i, s, last, c = run
-            return (i, s, last + n - 1, last + n - s, c)
-
         for batch in it:
-            ids = np.asarray(batch.column(0)).astype(np.int64)
-            pos = np.asarray(batch.column(1)).astype(np.int64)
-            if len(ids) == 0:
+            row_idx, pos0, hs = gram_keys(batch.column("_ks"))
+            if not len(pos0):
                 continue
-            same = ids[1:] == ids[:-1]
-            d = pos[1:] - pos[:-1]
-            if np.any(same & (d <= 0)):
-                raise RuntimeError(
-                    "islands kernel: positions not strictly ascending within a doc"
+            hs = [pa.array(h) for h in hs]
+            if counts:
+                # use_threads=False: the task slot is the parallelism unit
+                g = (
+                    pa.table(dict(zip(key_names, hs)))
+                    .group_by(key_names, use_threads=False)
+                    .aggregate([([], "count_all")])
+                    .select(key_names + ["count_all"])
+                    .rename_columns(key_names + ["n_occ"])
                 )
-            starts = np.concatenate(
-                ([0], np.flatnonzero(~same | (d > n)) + 1, [len(ids)])
-            )
-            s_arr, e_arr = starts[:-1], starts[1:]
-            seg_id = ids[s_arr]
-            seg_sp = pos[s_arr].copy()
-            seg_ep = pos[e_arr - 1]
-            seg_cnt = (e_arr - s_arr).astype(np.int64)
-            flushed = None
-            if cur is not None:
-                gap = int(seg_sp[0]) - cur[2]
-                if int(seg_id[0]) == cur[0] and gap <= n:
-                    if gap <= 0:
-                        raise RuntimeError(
-                            "islands kernel: positions not strictly ascending within a doc"
-                        )
-                    seg_sp[0] = cur[1]
-                    seg_cnt[0] += cur[3]
-                else:
-                    flushed = span_of(cur)
-                    if int(seg_id[0]) != cur[0]:
-                        seen.add(cur[0])
-                cur = None
-            # contiguity guard: only id TRANSITIONS need set bookkeeping —
-            # O(docs per batch), not O(segments)
-            trans = np.flatnonzero(
-                np.concatenate(([True], seg_id[1:] != seg_id[:-1]))
-            )
-            prev = None
-            for t in trans:
-                i = int(seg_id[t])
-                if prev is not None:
-                    seen.add(prev)
-                if i in seen:
-                    raise RuntimeError(
-                        "islands kernel: doc id revisited — input not doc-contiguous"
-                    )
-                prev = i
-            # segments 0..K-2 are complete; the last stays open (carried)
-            K = len(s_arr)
-            cur = [int(seg_id[K - 1]), int(seg_sp[K - 1]), int(seg_ep[K - 1]), int(seg_cnt[K - 1])]
-            cols = [
-                seg_id[: K - 1],
-                seg_sp[: K - 1],
-                seg_ep[: K - 1] + (n - 1),
-                seg_ep[: K - 1] + n - seg_sp[: K - 1],
-                seg_cnt[: K - 1],
-            ]
-            if flushed is not None:
-                f = np.array(flushed, dtype=np.int64)
-                cols = [np.concatenate(([f[i]], c)) for i, c in enumerate(cols)]
-            if len(cols[0]):
+                for rb in g.to_batches():
+                    if rb.num_rows:
+                        yield rb
+            else:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(c) for c in cols], names=NAMES
+                    [batch.column("id").take(row_idx), pa.array(pos0 + 1)] + hs,
+                    names=["id", "pos"] + key_names,
                 )
-        if cur is not None:
-            f = np.array([span_of(cur)], dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(f[:, i]) for i in range(5)], names=NAMES
-            )
 
-    return dup_pos.select("id", "pos").mapInArrow(
-        kernel,
-        "doc_id bigint, span_start bigint, span_end bigint, span_len bigint, n_shingles bigint",
+    return kernel
+
+
+def _gram_positions(keyed: DataFrame, width: int) -> DataFrame:
+    """(id, pos, h0..): the position relation of ``keyed``'s grams, the id
+    passed through with its own type (the scale-side fallback takes
+    string ids too)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [keyed.schema["id"], T.StructField("pos", T.LongType())]
+        + [T.StructField(f"h{k}", T.LongType()) for k in range((width + 1) // 2)]
     )
+    return keyed.select("id", "_ks").mapInArrow(_gram_kernel(width), schema)
+
+
+def _packable(df: DataFrame, tokens_col: str, who: str) -> None:
+    el_t = df.schema[tokens_col].dataType.elementType.typeName()
+    if el_t not in ("integer", "short", "byte"):
+        raise ValueError(
+            f"{who} packs int32-range token ids; got array<{el_t}> for {tokens_col!r}"
+        )
 
 
 def token_shingle_positions(
@@ -750,47 +753,26 @@ def token_shingle_positions(
     """(id, pos, h): each token ``n``-gram with its 1-based start position —
     the tokens-native sibling of :func:`shingle_positions` (VERDICT r5
     item 1: Lee et al. span dedup is defined over token sequences, and the
-    graft input is ``(doc_id, tokens array<int>)``). The key is an
-    INJECTIVE integer packing, not a string and not a hash: consecutive
-    token pairs pack into one bigint each ((hi << 32) | unsigned(lo), an
-    odd tail token rides alone), so the key is a struct of ceil(n/2)
-    bigints. Exactly collision-free for any int32 token values — two
-    n-grams share a key iff they are the same token sequence, the same
-    equivalence classes as round 6's space-joined decimal rendering, so
-    every downstream span is identical. Chosen over the r6 string key by
-    measurement (optimization round 7): rendering + joining 5 decimal
-    strings per position dominated the whole span row (83 s of the 291 s
-    sf1.0 row was this map-side pass alone); the packed form is pure
-    integer arithmetic, ~16-24 B/key, and cheaper to hash, shuffle and
-    compare. ``id_col`` must be numeric (it is cast to bigint for the
-    fixed Arrow schema — the graft table's doc ids are numeric, see
-    ``__spark_entry__``).
+    graft input is ``(doc_id, tokens array<int>)``). The key ``h`` is the
+    struct of :func:`_gram_keys`' injective integer packing, not a string
+    and not a hash — the same equivalence classes as round 6's space-
+    joined decimal rendering, so every downstream span is identical.
+    Chosen over the r6 string key by measurement (optimization round 7):
+    rendering + joining 5 decimal strings per position dominated the whole
+    span row (83 s of the 291 s sf1.0 row was this map-side pass alone);
+    the packed form is pure integer arithmetic, ~16-24 B/key, and cheaper
+    to hash, shuffle and compare.
 
     The pass runs as a vectorized ``mapInArrow`` kernel (guide §4.2): a
     Catalyst transform-lambda + posexplode formulation of the same packing
     is interpreted per element (higher-order functions do not participate
     in whole-stage codegen) and measured 53 s at sf1.0 where the numpy
-    sliding-window kernel takes 19 s — the whole batch is one contiguous
-    Arrow values buffer, so every gram word is one vectorized shift-or
-    over strided views. Map-side only; only (id, tokens) cross the Python
-    boundary."""
-    el_t = df.schema[tokens_col].dataType.elementType.typeName()
-    if el_t not in ("integer", "short", "byte"):
-        raise ValueError(
-            f"token_shingle_positions packs int32-range token ids; got "
-            f"array<{el_t}> for {tokens_col!r}"
-        )
-    n_words = (n + 1) // 2
-    kernel = _token_shingle_kernel(n, n_words)
-    flat_schema = "id bigint, pos bigint, " + ", ".join(
-        f"h{k} bigint" for k in range(n_words)
-    )
-    flat = df.select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(tokens_col).alias("_ts")
-    ).mapInArrow(kernel, flat_schema)
-    return flat.select(
-        "id", "pos", F.struct(*[f"h{k}" for k in range(n_words)]).alias("h")
-    )
+    sliding-window kernel takes 19 s. Map-side only; only (id, tokens)
+    cross the Python boundary."""
+    _packable(df, tokens_col, "token_shingle_positions")
+    keyed = df.select(F.col(id_col).alias("id"), F.col(tokens_col).alias("_ks"))
+    key_names = [f"h{k}" for k in range((n + 1) // 2)]
+    return _gram_positions(keyed, n).select("id", "pos", F.struct(*key_names).alias("h"))
 
 
 def token_shingle_count_partials(
@@ -803,100 +785,13 @@ def token_shingle_count_partials(
     the JVM instead of one row per position. Sum over ``h`` to get global
     occurrence counts — exactly ``token_shingle_positions(...).groupBy(h)
     .count()``."""
-    el_t = df.schema[tokens_col].dataType.elementType.typeName()
-    if el_t not in ("integer", "short", "byte"):
-        raise ValueError(
-            f"token_shingle_count_partials packs int32-range token ids; got "
-            f"array<{el_t}> for {tokens_col!r}"
-        )
-    n_words = (n + 1) // 2
-    kernel = _token_shingle_kernel(n, n_words, counts=True)
-    flat_schema = (
-        ", ".join(f"h{k} bigint" for k in range(n_words)) + ", n_occ bigint"
+    _packable(df, tokens_col, "token_shingle_count_partials")
+    key_names = [f"h{k}" for k in range((n + 1) // 2)]
+    flat = df.select(F.col(tokens_col).alias("_ks")).mapInArrow(
+        _gram_kernel(n, counts=True),
+        ", ".join(f"{k} bigint" for k in key_names) + ", n_occ bigint",
     )
-    flat = df.select(F.lit(0).cast("bigint").alias("id"), F.col(tokens_col).alias("_ts")).mapInArrow(
-        kernel, flat_schema
-    )
-    return flat.select(
-        F.struct(*[f"h{k}" for k in range(n_words)]).alias("h"), "n_occ"
-    )
-
-
-def _token_shingle_kernel(n: int, n_words: int, counts: bool = False):
-    """Build the sliding-window shingle kernel for :func:`token_shingle_
-    positions`: per Arrow batch, flatten the token lists to one contiguous
-    int64 array, index every n-gram start with strided arithmetic, and
-    pack consecutive token pairs into bigint key words — all numpy, no
-    per-row Python. With ``counts=True`` the kernel instead emits per-batch
-    PARTIAL key counts (pyarrow hash group_by). NULL token arrays
-    contribute no grams (the Catalyst ``when(size >= n)`` guard's
-    behavior); NULL token VALUES are rejected loudly (the values buffer is
-    undefined there — silent garbage keys would be far worse than an
-    error)."""
-
-    def kernel(it):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        MASK = np.int64(4294967295)
-        for batch in it:
-            ids = np.asarray(batch.column(0)).astype(np.int64)
-            tok = batch.column(1)
-            if tok.values.null_count:
-                raise ValueError(
-                    "token_shingle_positions: NULL token values unsupported"
-                )
-            lens = pc.fill_null(pc.list_value_length(tok), 0)
-            lens = np.asarray(lens).astype(np.int64)
-            offs = np.asarray(tok.offsets).astype(np.int64)
-            vals = np.asarray(tok.values).astype(np.int64)
-            m = np.maximum(lens - n + 1, 0)
-            total = int(m.sum())
-            if total == 0:
-                continue
-            row_idx = np.repeat(np.arange(len(lens)), m)
-            gstart = np.repeat(offs[:-1], m)
-            pos0 = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(m) - m, m)
-            g0 = gstart + pos0
-            hs = []
-            for k in range(n_words):
-                hi = vals[g0 + 2 * k]
-                if 2 * k + 1 < n:
-                    lo = vals[g0 + 2 * k + 1]
-                    hs.append((hi << 32) | (lo & MASK))
-                else:
-                    hs.append(hi)
-            if counts:
-                # hash-based partial counting (pyarrow group_by). The
-                # obvious sort-then-boundary-diff alternatives were all
-                # measured slower on the real dup-heavy corpus: a memcmp-
-                # order void-view sort of the packed key bytes cost 2.84 s
-                # vs 1.05 s for this group_by on the identical sf0.1 pass
-                # (void comparisons are per-element function calls, and
-                # heavy duplication makes the comparison count worst-case),
-                # and an n_words-key lexsort was ~1.5x slower still.
-                # use_threads=False: the task slot is the parallelism unit.
-                key_names = [f"h{k}" for k in range(n_words)]
-                tb = pa.table({nm: h for nm, h in zip(key_names, hs)})
-                g = (
-                    tb.group_by(key_names, use_threads=False)
-                    .aggregate([([], "count_all")])
-                    .select(key_names + ["count_all"])
-                    .rename_columns(key_names + ["n_occ"])
-                )
-                for rb in g.to_batches():
-                    if rb.num_rows:
-                        yield rb
-            else:
-                cols = [pa.array(ids[row_idx]), pa.array(pos0 + 1)] + [
-                    pa.array(h) for h in hs
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    cols, names=["id", "pos"] + [f"h{k}" for k in range(n_words)]
-                )
-
-    return kernel
+    return flat.select(F.struct(*key_names).alias("h"), "n_occ")
 
 
 def token_substring_spans(
@@ -904,71 +799,51 @@ def token_substring_spans(
 ) -> DataFrame:
     """Span-level exact-substring dedup over TOKEN SEQUENCES — the form Lee
     et al. 2021 actually define (their suffix array is built over the
-    tokenized corpus), run on the graft's own input table. Same distributed
-    shape as :func:`substring_spans` (map-side shingles, ONE partial-agg
-    shuffle of hashes, dup-set probe, per-doc islands merge); returns
-    (doc_id, span_start, span_end, span_len, n_shingles) with 1-based
-    inclusive TOKEN indexes. The dup index aggregates kernel-side partial
-    counts (:func:`token_shingle_count_partials`) so raw positions never
-    enter the JVM aggregation.
-
-    Probe shape (round 7): when the dup set fits the broadcast gate
-    (``DUP_BROADCAST_ROWS`` — the same memory bound the JVM broadcast
-    join already implies, since a broadcast relation is collected to the
-    driver either way), it ships to the probe as raw key bytes in a
-    Spark broadcast variable and the WHOLE probe — shingle keys,
-    membership (one C++ hash-set lookup per gram), islands merge — runs in a
-    single Arrow kernel pass over the token table: no position relation
-    ever leaves Python, no join, and islands need no cross-batch carry
-    (each doc's grams live inside its own row). Above the gate the plain
-    shuffle semi-join + window formulation remains (the 100 TB-safe
-    fallback), exactly as in :func:`_global_dup_spans`."""
-    from pyspark.sql import types as T
-
+    tokenized corpus), run on the graft's own input table. Same shape as
+    :func:`substring_spans` — ONE partial-agg shuffle of keys into the dup
+    index, then the span core (:func:`_find_spans`) with gram width ``n``
+    — and returns the same fields with 1-based inclusive TOKEN indexes.
+    The dup index aggregates kernel-side partial counts
+    (:func:`token_shingle_count_partials`) so raw positions never enter the
+    JVM aggregation."""
     counts = (
         token_shingle_count_partials(df, n, tokens_col)
         .groupBy("h")
         .agg(F.sum("n_occ").alias("n_occ"))
     )
-    dup_h = (
-        counts.filter(F.col("n_occ") >= 2).select("h").localCheckpoint(eager=True)
-    )
-    n_words = (n + 1) // 2
-    id_integral = isinstance(
-        df.schema[id_col].dataType, (T.LongType, T.IntegerType)
-    )
-    if id_integral and dup_h.count() <= DUP_BROADCAST_ROWS:
-        return _token_spans_via_broadcast(df, dup_h, n, n_words, tokens_col, id_col)
-    sp = token_shingle_positions(df, n, tokens_col, id_col)
-    dup_pos = sp.join(dup_h, "h", "left_semi")
-    return _spans_from_dup_positions(dup_pos, n)
+    dup = counts.filter(F.col("n_occ") >= 2).select("h.*")
+    keyed = df.select(F.col(id_col).alias("id"), F.col(tokens_col).alias("_ks"))
+    return _find_spans(keyed, n, n, dup)
 
 
-def _token_spans_via_broadcast(
-    df: DataFrame, dup_h: DataFrame, n: int, n_words: int,
-    tokens_col: str, id_col: str,
-) -> DataFrame:
-    """Single-pass probe for :func:`token_substring_spans`: the dup keys
-    arrive as a broadcast of their raw fixed-width key bytes; membership
-    is one hash-table lookup per gram (``pyarrow.compute.is_in`` over a
+def _probe_spans(keyed: DataFrame, dup: DataFrame, width: int, n: int) -> DataFrame:
+    """The broadcast side of :func:`_find_spans`: the dup keys arrive as a
+    broadcast of their raw fixed-width key bytes; membership is one
+    hash-table lookup per gram (``pyarrow.compute.is_in`` over a
     ``fixed_size_binary`` view of the packed words — exact binary
-    equality, the same equivalence classes as the struct key). A
+    equality, the same equivalence classes as the key columns). A
     ``np.searchsorted`` over a sorted void view of the same bytes was
     measured 5.3x slower on the real corpus (298.9 vs 56.6 ms per 640k-
     gram batch at sf0.1): void comparisons are per-element function
     calls, and a binary search pays ~18 of them per probe where the hash
-    set pays one vectorized lookup. Islands merge is the same vectorized
-    break logic as :func:`_dup_span_islands_arrow`, but with no carried
-    state: a doc's grams are complete within its own input row."""
+    set pays one vectorized lookup.
+
+    Islands need no state across batches: a doc's grams are all in its
+    own input row, emitted in ascending position order, so one vectorized
+    pass finds the breaks (a new doc, or a gap > ``n``). That holds only
+    if each doc is ONE row, so a repeated id — adjacent or not, in the
+    same batch or a later one of the task — raises instead of silently
+    merging (the window fallback would merge the rows' positions)."""
     import numpy as np
 
-    spark = df.sparkSession
-    pdf = dup_h.select("h.*").toPandas()
+    n_words = (width + 1) // 2
     key_bytes = np.int64().itemsize * n_words
-    dup = np.empty((len(pdf), n_words), dtype=np.int64)
+    pdf = dup.toPandas()
+    dv = np.empty((len(pdf), n_words), dtype=np.int64)
     for k in range(n_words):
-        dup[:, k] = pdf[f"h{k}"].to_numpy(dtype=np.int64)
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(dup))
+        dv[:, k] = pdf[f"h{k}"].to_numpy(dtype=np.int64)
+    bc = keyed.sparkSession.sparkContext.broadcast(dv)
+    gram_keys = _gram_keys(width)
     NAMES = ["doc_id", "span_start", "span_end", "span_len", "n_shingles"]
 
     def kernel(it):
@@ -979,57 +854,24 @@ def _token_spans_via_broadcast(
         dup_set = pa.Array.from_buffers(
             pa.binary(key_bytes), len(dv), [None, pa.py_buffer(dv)]
         )
-        MASK = np.int64(4294967295)
-        seen_ids: set[int] = set()
+        seen: set[int] = set()
         for batch in it:
-            ids = np.asarray(batch.column(0)).astype(np.int64)
-            tok = batch.column(1)
-            if tok.values.null_count:
-                raise ValueError(
-                    "token_substring_spans: NULL token values unsupported"
-                )
-            lens = np.asarray(pc.fill_null(pc.list_value_length(tok), 0)).astype(np.int64)
-            offs = np.asarray(tok.offsets).astype(np.int64)
-            vals = np.asarray(tok.values).astype(np.int64)
-            m = np.maximum(lens - n + 1, 0)
-            total = int(m.sum())
-            if total == 0:
+            ids = np.asarray(batch.column("id")).astype(np.int64)
+            uniq = np.unique(ids).tolist()
+            if len(uniq) < len(ids) or not seen.isdisjoint(uniq):
+                raise RuntimeError("span probe: duplicate doc id in input")
+            seen.update(uniq)
+            row_idx, pos0, hs = gram_keys(batch.column("_ks"))
+            if not len(pos0) or not len(dv):
                 continue
-            row_idx = np.repeat(np.arange(len(lens)), m)
-            gstart = np.repeat(offs[:-1], m)
-            pos0 = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(m) - m, m)
-            g0 = gstart + pos0
-            keys = np.empty((total, n_words), dtype=np.int64)
-            for k in range(n_words):
-                hi = vals[g0 + 2 * k]
-                if 2 * k + 1 < n:
-                    keys[:, k] = (hi << 32) | (vals[g0 + 2 * k + 1] & MASK)
-                else:
-                    keys[:, k] = hi
-            if len(dv):
-                kb = np.ascontiguousarray(keys)
-                probe = pa.Array.from_buffers(
-                    pa.binary(key_bytes), total, [None, pa.py_buffer(kb)]
-                )
-                is_dup = pc.is_in(probe, value_set=dup_set).to_numpy(
-                    zero_copy_only=False
-                )
-            else:
-                is_dup = np.zeros(total, dtype=bool)
+            probe = pa.Array.from_buffers(
+                pa.binary(key_bytes), len(pos0), [None, pa.py_buffer(np.column_stack(hs))]
+            )
+            is_dup = pc.is_in(probe, value_set=dup_set).to_numpy(zero_copy_only=False)
             if not is_dup.any():
                 continue
             d_ids = ids[row_idx[is_dup]]
             d_pos = pos0[is_dup] + 1
-            # duplicate-doc-id guard (the window formulation would MERGE
-            # positions of repeated ids; this per-row shape cannot — raise
-            # loudly instead of silently diverging)
-            uniq = ids[np.concatenate(([True], ids[1:] != ids[:-1]))]
-            for i in uniq.tolist():
-                if i in seen_ids:
-                    raise RuntimeError(
-                        "token_substring_spans: duplicate doc id in input"
-                    )
-                seen_ids.add(i)
             same = d_ids[1:] == d_ids[:-1]
             gap = d_pos[1:] - d_pos[:-1]
             starts = np.concatenate(
@@ -1049,39 +891,31 @@ def _token_spans_via_broadcast(
                 names=NAMES,
             )
 
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(tokens_col).alias("_ts")
-    ).mapInArrow(
+    return keyed.select(F.col("id").cast("bigint").alias("id"), "_ks").mapInArrow(
         kernel,
         "doc_id bigint, span_start bigint, span_end bigint, span_len bigint, n_shingles bigint",
     )
 
 
-def remove_repeated_token_spans(
-    df: DataFrame, n: int = SPAN_NGRAM, tokens_col: str = "tokens",
-    id_col: str = "doc_id", spans: DataFrame | None = None,
-) -> DataFrame:
-    """APPLY half of token-level span dedup: drop every token covered by a
-    repeated-substring span (tiny span relation collected per doc and
-    left-joined back; the token arrays are never exploded and never cross a
-    shuffle). Returns (doc_id, clean_tokens array<int>, n_kept, n_removed)
-    for EVERY input document.
+def _span_gaps(docs: DataFrame, spans: DataFrame):
+    """The one span cleaner over (doc_id, _ts array): returns the docs
+    left-joined to their collected spans, and the Column of ``_ts`` with
+    every covered position dropped. The tiny span relation is collected
+    per doc and left-joined back; the arrays are never exploded and never
+    cross a shuffle.
 
-    Round 7 reshapes the drop from a per-TOKEN ``filter(exists(spans))``
-    HOF — O(n_tok x spans) interpreted lambda calls per doc, the dominant
+    Round 7 reshaped the drop from a per-element ``filter(exists(spans))``
+    HOF — O(n_elems x spans) interpreted lambda calls per doc, the dominant
     cost of the tok_clean kind at sf1.0 — to a per-SPAN gap slice: the
     doc's spans are sorted and overlap-merged (a no-op for find output,
-    which is already disjoint, but keeps the function correct for
-    arbitrary caller-supplied span relations), and ``clean_tokens`` is the
+    which is already disjoint, but keeps the cleaner correct for arbitrary
+    caller-supplied span relations), and the kept array is the
     concatenation of the inter-span slices — O(spans) array ops per doc,
     identical coverage, identical order."""
-    if spans is None:
-        spans = token_substring_spans(df, n, tokens_col, id_col)
     span_t = "array<struct<span_start:bigint,span_end:bigint>>"
     sp_agg = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    docs = df.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_ts"))
     joined = docs.join(sp_agg, "doc_id", "left").withColumn(
         "_spans", F.coalesce(F.col("_spans"), F.array().cast(span_t))
     )
@@ -1105,12 +939,26 @@ def remove_repeated_token_spans(
             F.greatest(end_excl - start, F.lit(0).cast("bigint")).cast("int"),
         )
 
-    kept = F.flatten(F.transform(F.sequence(F.lit(0), F.size(m)), _gap_slice))
+    return joined, F.flatten(F.transform(F.sequence(F.lit(0), F.size(m)), _gap_slice))
+
+
+def remove_repeated_token_spans(
+    df: DataFrame, n: int = SPAN_NGRAM, tokens_col: str = "tokens",
+    id_col: str = "doc_id", spans: DataFrame | None = None,
+) -> DataFrame:
+    """APPLY half of token-level span dedup: drop every token covered by a
+    repeated-substring span (:func:`_span_gaps`). Returns (doc_id,
+    clean_tokens array<int>, n_kept, n_removed) for EVERY input
+    document."""
+    if spans is None:
+        spans = token_substring_spans(df, n, tokens_col, id_col)
+    docs = df.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_ts"))
+    joined, kept = _span_gaps(docs, spans)
     return joined.select(
         "doc_id",
         kept.alias("clean_tokens"),
         F.size(kept).cast("bigint").alias("n_kept"),
-        (n_tok - F.size(kept)).cast("bigint").alias("n_removed"),
+        (F.size("_ts") - F.size(kept)).cast("bigint").alias("n_removed"),
     )
 
 
@@ -1141,7 +989,9 @@ def _merge_span_array(sorted_spans, span_t: str):
 def _spans_from_dup_positions(dup_pos: DataFrame, n: int) -> DataFrame:
     """Merge duplicated shingle-start positions (id, pos) into maximal
     spans: per-document islands window (lag + running sum) — partition =
-    one document, never a corpus-wide sort."""
+    one document, never a corpus-wide sort. The scale side of
+    :func:`_find_spans`: its shuffle destroys doc contiguity, so the merge
+    is a window, not the probe kernel's streaming pass."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("id").orderBy("pos")
@@ -1272,20 +1122,20 @@ def span_incremental_spans(
     shingle's global count, so this result equals
     ``substring_spans(full corpus)`` restricted to the batch's documents —
     that equality is the test gate. Scale shape: history is ONE FileScan
-    of (h, n_occ) partials re-aggregated by hash (never re-shingled);
-    only the batch's own text is shingled again for its positions — a
-    map-side pass over the increment, not the corpus."""
+    of (h, n_occ) partials re-aggregated by hash (never re-shingled) into
+    the dup set of the span core (:func:`_find_spans`); only the batch's
+    own text is shingled again — a map-side pass over the increment, not
+    the corpus."""
     all_counts = store.read(spark, SPAN_INDEX_TABLE)
     if all_counts is None:
         raise ValueError(f"no snapshots committed to {SPAN_INDEX_TABLE}")
-    dup_h = (
+    dup = (
         all_counts.groupBy("h")
         .agg(F.sum("n_occ").alias("n_occ"))
         .filter(F.col("n_occ") >= 2)
-        .select("h")
+        .select(F.col("h").alias("h0"))
     )
-    sp = shingle_positions(batch, n, text_col, id_col)
-    return _spans_from_dup_positions(sp.join(dup_h, "h", "left_semi"), n)
+    return _find_spans(_word_keys(batch, n, text_col, id_col), 1, n, dup)
 
 
 def remove_repeated_spans(
@@ -1294,43 +1144,27 @@ def remove_repeated_spans(
 ) -> DataFrame:
     """APPLY the span-level dedup (the step after :func:`substring_spans`
     finds the spans): drop every word covered by a repeated-substring
-    span and re-join the survivors — the corpus-cleaning half of the
-    Lee et al. 2021 pipeline. Returns
+    span and re-join the survivors with " " — the corpus-cleaning half of
+    the Lee et al. 2021 pipeline. Returns
     (doc_id, clean_text, n_kept, n_removed) for EVERY input document
     (documents without spans pass through unchanged).
 
-    Distributed shape (100 TB story): the span relation is tiny relative
-    to the corpus (only repeated regions survive), collected per doc_id
-    into an array by ONE groupBy and left-joined back; the word drop is
-    a pure Catalyst higher-order filter (two-arg lambda gives the word
-    index; an EXISTS over the doc's span array covers it) — the corpus
-    text is never exploded and never crosses a shuffle. Pass ``spans``
-    (a precomputed/persisted :func:`substring_spans` relation) to avoid
-    re-shingling the corpus when the caller already has it."""
+    The drop is the token cleaner's gap slice (:func:`_span_gaps`) over
+    the words array — the corpus text is never exploded and never crosses
+    a shuffle. Pass ``spans`` (a precomputed/persisted
+    :func:`substring_spans` relation) to avoid re-shingling the corpus
+    when the caller already has it."""
     if spans is None:
         spans = substring_spans(df, n, text_col, id_col)
-    span_t = "array<struct<span_start:bigint,span_end:bigint>>"
-    sp_agg = spans.groupBy("doc_id").agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
-    )
     docs = df.select(
-        F.col(id_col).alias("doc_id"), words_col(F.col(text_col)).alias("_ws")
+        F.col(id_col).alias("doc_id"), words_col(F.col(text_col)).alias("_ts")
     )
-    joined = docs.join(sp_agg, "doc_id", "left").withColumn(
-        "_spans", F.coalesce(F.col("_spans"), F.array().cast(span_t))
-    )
-    kept = F.filter(
-        F.col("_ws"),
-        lambda w, i: ~F.exists(
-            F.col("_spans"),
-            lambda s: ((i + 1) >= s["span_start"]) & ((i + 1) <= s["span_end"]),
-        ),
-    )
+    joined, kept = _span_gaps(docs, spans)
     return joined.select(
         "doc_id",
         F.array_join(kept, " ").alias("clean_text"),
         F.size(kept).cast("bigint").alias("n_kept"),
-        (F.size("_ws") - F.size(kept)).cast("bigint").alias("n_removed"),
+        (F.size("_ts") - F.size(kept)).cast("bigint").alias("n_removed"),
     )
 
 

@@ -10,7 +10,12 @@
   At 10^12 rows the bucket map-side partitions the corpus; brute force
   remains the per-bucket kernel.
 
-All pure Catalyst (zip_with/aggregate) — no Python in the hot path.
+The brute-force and LSH scoring is pure Catalyst (``int_dot``:
+zip_with/aggregate). Python runs in three places: ``int_dot_arrow`` (a
+pandas UDF, the vectorized dot for high-fanout join outputs such as the
+IVF assignment) and the numpy block-matmul kernels of
+``all_pairs_cosine_micro`` and ``bucketed_cosine_pairs``, run per group
+through ``applyInPandas``.
 """
 
 from __future__ import annotations

@@ -74,6 +74,36 @@ def json_parse(event: Event, time_key: str = "", go_layout: str = "2006-01-02T15
     return True
 
 
+def _go_regex(pattern: str) -> re.Pattern:
+    """Compile ``pattern`` with Go regexp (RE2) semantics where Python's
+    ``re`` differs: \\d \\w \\s \\b are ASCII-only, and ``$`` without the
+    multi-line flag matches only at the end of the text (Python's also
+    matches before a final "\\n"), so it is rewritten to ``\\Z`` outside
+    character classes."""
+    if re.compile(pattern).flags & re.MULTILINE:
+        return re.compile(pattern, re.ASCII)
+    out, i, in_class = [], 0, False
+    while i < len(pattern):
+        c = pattern[i]
+        if c == "\\":
+            out.append(pattern[i : i + 2])
+            i += 2
+            continue
+        if in_class:
+            in_class = c != "]"
+        elif c == "[":
+            # a "]" right after "[" or "[^" is a literal member
+            j = i + 1 + (pattern[i + 1 : i + 2] == "^")
+            if pattern[j : j + 1] == "]":
+                c, i = pattern[i : j + 1], j
+            in_class = True
+        elif c == "$":
+            c = r"\Z"
+        out.append(c)
+        i += 1
+    return re.compile("".join(out), re.ASCII)
+
+
 def regex_parse(
     event: Event,
     pattern: str,
@@ -82,13 +112,15 @@ def regex_parse(
     go_layout: str = "2006-01-02T15:04:05Z07:00",
 ) -> bool:
     """regex parser Process (internal/parser/regex/regex.go:58-86):
-    unanchored leftmost search; named groups -> map; non-participating
-    groups are "" (Go semantics); AllowEmpty=false drops empty values."""
-    m = re.search(pattern, event.raw)
+    unanchored leftmost search (:func:`_go_regex`); named groups -> map;
+    non-participating groups are "" (Go semantics); AllowEmpty=false drops
+    empty values."""
+    rx = _go_regex(pattern)
+    m = rx.search(event.raw)
     if m is None:
         return False
     decoded: dict[str, Any] = {}
-    for name in re.compile(pattern).groupindex:
+    for name in rx.groupindex:
         value = m.group(name)
         value = "" if value is None else value
         if allow_empty or value != "":

@@ -1,9 +1,9 @@
-"""Storage abstraction: Iceberg when available, parquet + snapshot manifests
-otherwise (SURVEY §7.0).
+"""Storage abstraction: parquet + snapshot manifests, standing in for the
+Iceberg tables a production deployment writes (SURVEY §7.0).
 
-The production deployment writes Iceberg tables (atomic snapshot commits,
-incremental ``start-snapshot-id`` reads). This sandbox has no Iceberg
-runtime jar, so the fallback reproduces the two Iceberg behaviors the
+Iceberg gives atomic snapshot commits and incremental ``start-snapshot-id``
+reads. No Iceberg runtime jar ships with this repository, so there is no
+Iceberg backend; the parquet store reproduces the Iceberg behaviors the
 pipeline actually relies on:
 
 1. **Atomic snapshot commit**: data files land under
@@ -21,9 +21,9 @@ pipeline actually relies on:
    an ephemeral TTL lease that fences ``compact()`` — the stand-ins for
    Iceberg's optimistic-commit retry and snapshot-expiration retention.
 
-Checkpoint/lineage logic is written against this interface, so the
-spark-submit cluster deployment is config-only (swap ``ParquetSnapshotStore``
-for ``IcebergStore``).
+Checkpoint/lineage logic is written against this interface, so an Iceberg
+backend implementing it can replace ``ParquetSnapshotStore`` once the
+runtime jar is available.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ LEASE_TTL_SEC = 900.0  # crashed readers stop fencing compaction after this
 
 
 class ParquetSnapshotStore:
-    """Parquet-files + JSON-manifest snapshot store (Iceberg fallback)."""
+    """Parquet-files + JSON-manifest snapshot store (the Iceberg stand-in)."""
 
     def __init__(self, base: str, lease_ttl_sec: float = LEASE_TTL_SEC):
         self.base = base
@@ -621,175 +621,3 @@ class ParquetSnapshotStore:
             shutil.rmtree(p, ignore_errors=True)
             n += 1
         return n
-
-
-class IcebergStore:
-    """Real-Iceberg variant (needs iceberg-spark-runtime on the classpath;
-    config-only swap on a real cluster). Interface-complete with
-    :class:`ParquetSnapshotStore` (self-review r6: the streaming wirings'
-    exactly-once rested on kwargs this class used to silently ignore)."""
-
-    def __init__(self, catalog: str = "spark_catalog"):
-        self.catalog = catalog
-
-    def _external_id(self, spark: SparkSession, table: str,
-                     snapshot_id: int) -> int | None:
-        """Iceberg snapshot whose summary carries our explicit id (the
-        snapshot-summary analog of the fallback's manifest filename)."""
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {self.catalog}.{table}.snapshots "
-            f"WHERE summary['external-id'] = '{int(snapshot_id)}' LIMIT 1"
-        ).head()
-        return row[0] if row else None
-
-    def append(self, df: DataFrame, table: str, snapshot_id: int | None = None,
-               partition_by: list[str] | None = None,
-               meta: dict | None = None) -> int:
-        """``snapshot_id`` maps to the Iceberg snapshot-summary property
-        ``external-id`` (checked before the write, raising the fallback's
-        ValueError on a SEQUENTIAL replay, which is what Spark's micro-batch
-        redelivery produces). KNOWN WEAKER GUARANTEE than the fallback
-        (self-review r6 pass 2): the check-then-append is not atomic, so
-        two CONCURRENT writers racing the same explicit id (a zombie driver
-        surviving a failover) can both commit. Iceberg-side one-winner
-        semantics needs an atomic ref op — create a tag ``ext-<id>`` after
-        the append and roll back on collision — which requires a runtime to
-        validate; until then, rely on the orchestration layer's
-        single-active-driver guarantee and treat duplicate external-ids
-        surfaced by manifest_meta as the audit signal. ``meta`` lands as
-        summary properties. ``partition_by`` is advisory: Iceberg
-        partitioning is the TABLE's spec (declared at CREATE), appends
-        inherit it."""
-        spark = df.sparkSession
-        writer = df.writeTo(f"{self.catalog}.{table}")
-        if snapshot_id is not None:
-            if self._external_id(spark, table, snapshot_id) is not None:
-                raise ValueError(
-                    f"snapshot {snapshot_id} already committed to {table!r}"
-                )
-            writer = writer.option(
-                "snapshot-property.external-id", str(int(snapshot_id))
-            )
-        for k, v in (meta or {}).items():
-            writer = writer.option(f"snapshot-property.{k}", str(v))
-        writer.append()
-        if snapshot_id is not None:
-            return snapshot_id
-        hist = spark.sql(
-            f"SELECT snapshot_id FROM {self.catalog}.{table}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        )
-        return hist.head()[0]
-
-    def manifest_meta(self, table: str, snapshot_id: int) -> dict:
-        """Summary properties of the snapshot carrying ``external-id`` ==
-        snapshot_id ({} if absent) — same signature as the fallback store
-        (the streaming guard calls it); needs an active session."""
-        from pyspark.sql import SparkSession as _S
-
-        spark = _S.getActiveSession()
-        if spark is None:
-            return {}
-        row = spark.sql(
-            f"SELECT summary FROM {self.catalog}.{table}.snapshots "
-            f"WHERE summary['external-id'] = '{int(snapshot_id)}' LIMIT 1"
-        ).head()
-        if not row:
-            return {}
-        out = dict(row[0])
-        if "batch_id" in out:
-            try:
-                out["batch_id"] = int(out["batch_id"])
-            except ValueError:
-                pass
-        return out
-
-    def set_checkpoint(self, table: str, consumer: str, snapshot_id: int) -> None:
-        """Consumer progress as a table property (fences nothing natively —
-        Iceberg-side the compaction fence lives in orchestration; recorded
-        so :meth:`checkpoints` answers the same question as the fallback)."""
-        from pyspark.sql import SparkSession as _S
-
-        spark = _S.getActiveSession()
-        if spark is not None:
-            spark.sql(
-                f"ALTER TABLE {self.catalog}.{table} SET TBLPROPERTIES "
-                f"('checkpoint.{consumer}' = '{int(snapshot_id)}')"
-            )
-
-    def checkpoints(self, table: str) -> dict[str, int]:
-        from pyspark.sql import SparkSession as _S
-
-        spark = _S.getActiveSession()
-        if spark is None:
-            return {}
-        rows = spark.sql(f"SHOW TBLPROPERTIES {self.catalog}.{table}").collect()
-        return {
-            r["key"][len("checkpoint."):]: int(r["value"])
-            for r in rows
-            if r["key"].startswith("checkpoint.")
-        }
-
-    def read(self, spark: SparkSession, table: str, after_snapshot: int | None = None,
-             lease: bool = True):
-        # lease accepted for interface parity; Iceberg keeps folded files
-        # reachable until snapshot expiration, so in-flight readers are
-        # protected by the table's own retention, not a side-channel lease
-        reader = spark.read.format("iceberg")
-        if after_snapshot is not None:
-            # after_snapshot is an EXTERNAL id (the fallback's small int);
-            # Iceberg's start-snapshot-id wants a NATIVE id (random long) —
-            # passing the external id through read the wrong snapshot or
-            # none at all (self-review r6 pass 2). Resolve via the summary:
-            # the newest native snapshot stamped external-id <= the cursor
-            # is the exclusive start point; none stamped (cursor before the
-            # first increment, e.g. 0) = read everything, matching the
-            # fallback's "ids > j" semantics.
-            row = spark.sql(
-                f"SELECT snapshot_id FROM {self.catalog}.{table}.snapshots "
-                f"WHERE TRY_CAST(summary['external-id'] AS BIGINT)"
-                f" <= {int(after_snapshot)} "
-                "ORDER BY TRY_CAST(summary['external-id'] AS BIGINT) DESC "
-                "LIMIT 1"
-            ).head()
-            if row:
-                reader = reader.option("start-snapshot-id", str(row[0]))
-        return reader.load(f"{self.catalog}.{table}")
-
-    def release_leases(self, table: str | None = None) -> int:
-        return 0
-
-    def touch_leases(self, table: str | None = None) -> int:
-        return 0
-
-    def compact(self, spark: SparkSession, table: str, target_mb: int = 128,
-                force: bool = False, partition_by: list[str] | None = None):
-        """Managed-table compaction is a stored procedure (same contract as
-        :meth:`ParquetSnapshotStore.compact` — run at a quiescent point;
-        Iceberg tracks no consumer checkpoints table-side, so the
-        checkpoint fence lives in the orchestration layer there; the
-        rewrite preserves the table's own partition spec, so partition_by
-        is advisory)."""
-        spark.sql(
-            f"CALL {self.catalog}.system.rewrite_data_files("
-            f"table => '{table}', "
-            f"options => map('target-file-size-bytes', '{target_mb * 1024 * 1024}'))"
-        )
-        return None
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def get_store(spark: SparkSession, base: str):
-    """Iceberg when on the classpath, parquet-manifest fallback otherwise."""
-    if iceberg_available(spark):
-        return IcebergStore()
-    return ParquetSnapshotStore(base)

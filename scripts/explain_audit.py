@@ -31,7 +31,7 @@ AUDIT = {
     "tokens_length_stats": "exact percentiles from the (source, n_tok) value histogram: partial-agg shuffle + k-th pick on the aggregate, no row_number over raw rows",
     "multimodal_features": "binary containers through a mapInPandas Arrow kernel; metadata plans prune the bytes column",
     "stream_route_counts": "foreachBatch streaming fan-out vs batch counts (oracle pins equality)",
-    "dedup_substring_spans": "span-level dedup: map-side shingle positions -> broadcast/shuffle semi-join against the dup-hash index -> per-doc islands windows sharing ONE sort -> partial+final agg",
+    "dedup_substring_spans": "span-level dedup, words and tokens through one span core: a partial-agg groupBy builds the dup-gram index; under the broadcast gate one Arrow kernel probes each doc's gram keys and merges islands (zero Exchange), above it positions semi-join the index and a per-doc window merges; the cleaners gap-slice the doc arrays against the collected spans",
     "bpe_encode": "subword encode: bounded vocab aggregation; the encode itself is a zero-shuffle broadcast-vocab Arrow kernel",
 }
 

@@ -409,6 +409,20 @@ def test_regex_dollar_does_not_match_before_trailing_newline(spark):
 
 
 @pytest.mark.parametrize(
+    "raw,pattern",
+    [("n=" + "\u0661\u0661", r"n=(?P<n>\d+)"), ("xy\n", r"^(?P<a>x)(y)?$")],
+)
+def test_oracle_regex_matches_re2(spark, raw, pattern):
+    # the pure-Python oracle follows Go/RE2, not Python's re: ASCII-only
+    # \d, and $ only at the end of the text — no match for either input,
+    # in the oracle and in the chain
+    ev = oracle.Event(raw=raw)
+    assert oracle.regex_parse(ev, pattern) is False and ev.parsed is None
+    row = _run_chain(spark, [raw], [RegexParser(pattern=pattern)])[raw]
+    assert row["parser"] is None and row["parsed"] is None
+
+
+@pytest.mark.parametrize(
     "pattern,rewritten",
     [
         (r"(x)(?P<a>y)", r"(?:x)(?P<a>y)"),

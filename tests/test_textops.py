@@ -130,6 +130,22 @@ def test_subword_encode_golden(spark):
         sw.encode_docs(df2, vocab).collect()
 
 
+SPAN_CORPUS = [
+    (1, "a b c d e f"),
+    (2, "x y a b c d q"),
+    (3, "p q r s p q r s"),
+    (4, "a b c z0 z1 z2 z3 a b c"),
+    (5, "completely unique words here indeed"),
+]
+TOKEN_CORPUS = [
+    (1, [1, 2, 3, 4, 5, 6]),
+    (2, [9, 9, 1, 2, 3, 4, 7]),
+    (3, [5, 6, 7, 8, 5, 6, 7, 8]),
+    (4, [1, 2, 3, 50, 51, 52, 53, 1, 2, 3]),
+    (5, [100, 101, 102, 103, 104]),
+]
+
+
 def test_substring_spans_golden(spark):
     # span-level (exact-substring) dedup — VERDICT r4 item 1. n=3 shingles:
     # doc 1/2 share the 4-gram "a b c d" (two overlapping dup 3-grams);
@@ -138,14 +154,7 @@ def test_substring_spans_golden(spark):
     # with gap > n -> TWO spans; doc 5 has no repeats -> no rows.
     import duckdb
 
-    corpus = [
-        (1, "a b c d e f"),
-        (2, "x y a b c d q"),
-        (3, "p q r s p q r s"),
-        (4, "a b c z0 z1 z2 z3 a b c"),
-        (5, "completely unique words here indeed"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
+    df = spark.createDataFrame(SPAN_CORPUS, "doc_id long, text string")
     got = {
         (r["doc_id"], r["span_start"]): (r["span_end"], r["span_len"], r["n_shingles"])
         for r in dd.substring_spans(df, n=3).collect()
@@ -168,7 +177,7 @@ def test_substring_spans_golden(spark):
     assert oracle == got
 
 
-def test_span_incremental_index(spark, tmp_path):
+def test_span_incremental_index(spark, tmp_path, monkeypatch):
     # round-6 shortlist item 1: incremental substring-span dedup. A second
     # run shingles ONLY its own batch; history arrives as (h, n_occ) count
     # partials off the snapshot store; a cross-batch repeat (first copy in
@@ -203,9 +212,15 @@ def test_span_incremental_index(spark, tmp_path):
 
     s2 = dd.span_index_increment(store, b2, n=3)
     assert s2 == 2
+    # history counts are READ off snap= partials, never re-shingled: the
+    # dup set handed to the span core scans only snapshot files
+    core, dups = dd._find_spans, []
+    monkeypatch.setattr(
+        dd, "_find_spans", lambda k, w, n, dup: dups.append(dup) or core(k, w, n, dup)
+    )
     got2 = dd.span_incremental_spans(spark, store, b2, n=3)
-    # history counts are READ off snap= partials, never re-shingled
-    assert all("snap=" in f for f in got2.inputFiles())
+    files = dups[0].inputFiles()
+    assert files and all("snap=" in f for f in files)
     rows2 = {
         (r["doc_id"], r["span_start"], r["span_end"], r["span_len"], r["n_shingles"])
         for r in got2.collect()
@@ -226,14 +241,7 @@ def test_remove_repeated_spans_golden_and_oracle(spark):
     # span-free docs pass through; DuckDB twin agrees on every column
     import duckdb
 
-    corpus = [
-        (1, "a b c d e f"),
-        (2, "x y a b c d q"),
-        (3, "p q r s p q r s"),
-        (4, "a b c z0 z1 z2 z3 a b c"),
-        (5, "completely unique words here indeed"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
+    df = spark.createDataFrame(SPAN_CORPUS, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_removed"])
         for r in dd.remove_repeated_spans(df, n=3).collect()
@@ -262,14 +270,7 @@ def test_token_substring_spans_golden_and_oracle(spark):
     # merge at gap == n, two far-apart spans, a span-free doc.
     import duckdb
 
-    corpus = [
-        (1, [1, 2, 3, 4, 5, 6]),
-        (2, [9, 9, 1, 2, 3, 4, 7]),
-        (3, [5, 6, 7, 8, 5, 6, 7, 8]),
-        (4, [1, 2, 3, 50, 51, 52, 53, 1, 2, 3]),
-        (5, [100, 101, 102, 103, 104]),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, tokens array<int>")
+    df = spark.createDataFrame(TOKEN_CORPUS, "doc_id long, tokens array<int>")
     got = {
         (r["doc_id"], r["span_start"]): (r["span_end"], r["span_len"], r["n_shingles"])
         for r in dd.token_substring_spans(df, n=3).collect()
@@ -388,41 +389,131 @@ def test_token_shingle_count_partials_match_positions(spark):
     assert partial == full and len(full) > 8
 
 
-def test_islands_kernel_matches_window_formulation(spark):
-    # r7 optimization pins the streaming Arrow islands merge (zero
-    # shuffle, broadcast path) against the window formulation on a corpus
-    # big enough to span several Arrow batches (default 10k rows/batch):
-    # multi-island docs, islands closing exactly at the gap==n boundary,
-    # and docs straddling batch boundaries.
+def test_islands_kernel_matches_window_formulation(spark, monkeypatch):
+    # the span core's two islands merges — the probe kernel's one-pass
+    # breaks (broadcast side) and the per-doc window (scale side) — on an
+    # adversarial position set: multi-island docs, islands closing exactly
+    # at the gap == n boundary, > 20k duplicated positions, and the docs
+    # spread over several Arrow batches. Each doc's key array carries the
+    # dup key 0 at exactly its listed positions and a unique key elsewhere.
     import random
 
     rnd = random.Random(7)
-    rows = []
+    rows, want = [], {}
     for doc in range(400):
-        pos = 1
+        pos, dups = 1, []
         for _ in range(rnd.randint(1, 120)):
-            rows.append((doc, pos))
+            dups.append(pos)
             # mix sub-n gaps (same island) and super-n gaps (new island)
             pos += rnd.choice([1, 1, 2, 3, 4, 9, 15])
-    assert len(rows) > 20000  # > 2 Arrow batches
-    # the kernel's contract (see _global_dup_spans): a doc's rows are
-    # contiguous and pos-ascending WITHIN a partition — guaranteed in the
-    # real pipeline because a doc's grams all come from its single input
-    # row (narrow expansion never crosses tasks); reproduce it here
-    df = (
-        spark.createDataFrame(rows, "id long, pos long")
-        .repartition(3, "id")
-        .sortWithinPartitions("id", "pos")
+        ks = [doc * 10_000 + p for p in range(1, dups[-1] + 2)]
+        for p in dups:
+            ks[p - 1] = 0
+        rows.append((doc, ks))
+        start = prev = dups[0]
+        cnt = 0
+        for p in dups + [None]:
+            if p is not None and p - prev <= 3:
+                prev, cnt = p, cnt + 1
+                continue
+            want[(doc, start)] = (prev + 2, prev + 3 - start, cnt)
+            if p is not None:
+                start = prev = p
+                cnt = 1
+    assert sum(len(k) for _, k in rows) > 20000
+    keyed = spark.createDataFrame(rows, "id long, _ks array<bigint>").coalesce(2)
+    dup = spark.createDataFrame([(0,)], "h0 bigint")
+
+    def spans(df):
+        return {
+            (r["doc_id"], r["span_start"]): (r["span_end"], r["span_len"], r["n_shingles"])
+            for r in df.collect()
+        }
+
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    try:
+        probe = dd._find_spans(keyed, 1, 3, dup)
+        assert "Window" not in probe._jdf.queryExecution().executedPlan().toString()
+        kernel = spans(probe)
+        monkeypatch.setattr(dd, "DUP_BROADCAST_ROWS", 0)
+        fallback = dd._find_spans(keyed, 1, 3, dup)
+        assert "Window" in fallback._jdf.queryExecution().executedPlan().toString()
+        window = spans(fallback)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    assert kernel == window == want and len(kernel) > 400
+
+
+def test_span_kernels_raise_on_duplicate_doc_id(spark):
+    # each doc must be ONE input row for the probe kernel's islands; a
+    # repeated id — adjacent, non-adjacent, or in a later Arrow batch of
+    # the task — raises instead of merging two rows' positions into one
+    # span (adjacent repeats used to slip through: (1, 1, 7, 7, 4))
+    tok = [(1, list(range(1, 9))), (1, [1, 2, 3, 9, 9, 9, 9])]
+    words = [(1, "a b c d e f g h"), (1, "a b c x x x x")]
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        for rows in (tok, [tok[0], (2, [7, 7, 7]), tok[1]]):
+            df = spark.createDataFrame(rows, "doc_id long, tokens array<int>").coalesce(1)
+            with pytest.raises(Exception, match="duplicate doc id"):
+                dd.token_substring_spans(df, n=3).collect()
+        for rows in (words, [words[0], (2, "q r s"), words[1]]):
+            df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+            with pytest.raises(Exception, match="duplicate doc id"):
+                dd.substring_spans(df, n=3).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_span_scale_side_matches_oracle(spark, monkeypatch, tmp_path, id_type):
+    # the DUP_BROADCAST_ROWS fallback (positions ⋉ dup set through a
+    # shuffle, per-doc window) against the DuckDB twins on the golden
+    # corpora; a string doc_id always takes it, a numeric one only above
+    # the gate (forced here)
+    import duckdb
+
+    from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
+
+    if id_type == "long":
+        monkeypatch.setattr(dd, "DUP_BROADCAST_ROWS", 0)
+
+    def doc_id(i):
+        return i if id_type == "long" else f"d{i}"
+
+    con = duckdb.connect()
+
+    def check(got_df, sql, table, pdf):
+        assert "Window" in got_df._jdf.queryExecution().executedPlan().toString()
+        con.register(table, pdf)
+        got = {tuple(r) for r in got_df.select(
+            "doc_id", "span_start", "span_end", "span_len", "n_shingles").collect()}
+        assert got == {tuple(r) for r in con.execute(sql).fetchall()} and got
+
+    docs = spark.createDataFrame(
+        [(doc_id(i), t) for i, t in SPAN_CORPUS], f"doc_id {id_type}, text string"
     )
-    kernel = {
-        (r["doc_id"], r["span_start"]): (r["span_end"], r["span_len"], r["n_shingles"])
-        for r in dd._dup_span_islands_arrow(df, 3).collect()
-    }
-    window = {
-        (r["doc_id"], r["span_start"]): (r["span_end"], r["span_len"], r["n_shingles"])
-        for r in dd._spans_from_dup_positions(df, 3).collect()
-    }
-    assert kernel == window and len(kernel) > 400
+    check(dd.substring_spans(docs, n=3), dd.substring_spans_sql("documents", n=3),
+          "documents", docs.toPandas())
+    toks = spark.createDataFrame(
+        [(doc_id(i), t) for i, t in TOKEN_CORPUS], f"doc_id {id_type}, tokens array<int>"
+    )
+    check(dd.token_substring_spans(toks, n=3),
+          dd.token_substring_spans_sql("tok_docs", n=3), "tok_docs", toks.toPandas())
+
+    # incremental read side: batch 2 under the full-corpus counts equals
+    # the full-corpus oracle restricted to batch 2's docs
+    batch1 = [(doc_id(i), t) for i, t in SPAN_CORPUS if i <= 2]
+    batch2 = [(doc_id(i), t) for i, t in SPAN_CORPUS if i > 2]
+    store = ParquetSnapshotStore(str(tmp_path))
+    schema = f"doc_id {id_type}, text string"
+    dd.span_index_increment(store, spark.createDataFrame(batch1, schema), n=3)
+    b2 = spark.createDataFrame(batch2, schema)
+    dd.span_index_increment(store, b2, n=3)
+    ids2 = ", ".join(repr(d) for d, _ in batch2)
+    check(dd.span_incremental_spans(spark, store, b2, n=3),
+          f"SELECT * FROM ({dd.substring_spans_sql('documents', n=3)}) "
+          f"WHERE doc_id IN ({ids2})", "documents", docs.toPandas())
 
 
 def test_remove_token_spans_overlapping_caller_spans(spark):
