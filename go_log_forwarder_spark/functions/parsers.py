@@ -15,14 +15,19 @@ Reference semantics:
   the FIRST match wins; if none matches the raw row continues down the
   pipeline with NULL parsed data.
 
-Spark realization: every parser exposes one method,
-``parse(raw) -> (parsed, canonical, matched)``, and the chain owns time
-extraction. The json path is pure Catalyst (``from_json`` plus a variant
-round-trip for the canonical). The regex path is ONE vectorized kernel: a
-pandas UDF whose body hands the whole Arrow batch to RE2 ``extract_regex``
-(Go's regexp syntax, so patterns mean what they mean in the reference) and
-returns the named groups plus the canonical text — the only Python in the
-hot path. The chain is a ``coalesce`` over per-parser candidate structs.
+Spark realization: every parser exposes the same two steps,
+``kernel(raw) -> k`` (the per-row work) and
+``derive(k) -> (parsed, canonical, matched)`` (pure Catalyst over the
+kernel's output). The chain owns time extraction and materializes each
+kernel output as its own column, so the kernel runs once per row however
+many derived columns and downstream filters read it. The json kernel is
+the identity and its derive is ``from_json`` plus a variant round-trip for
+the canonical. The regex kernel is ONE nondeterministic Arrow UDF
+(``pa.Array -> pa.StructArray``, no pandas) that hands the whole batch to
+RE2 ``extract_regex`` (Go's regexp syntax, so patterns mean what they mean
+in the reference) and returns the named groups plus the canonical text —
+the only Python in the hot path. The chain is a ``coalesce`` over
+per-parser candidate structs.
 """
 
 from __future__ import annotations
@@ -30,7 +35,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -242,7 +248,11 @@ class JsonParser:
     time_key: str = ""
     time_format: str = GO_RFC3339
 
-    def parse(self, raw: Column) -> tuple[Column, Column, Column]:
+    def kernel(self, raw: Column) -> Column:
+        """The identity: the json parse is pure Catalyst, all in derive."""
+        return raw
+
+    def derive(self, raw: Column) -> tuple[Column, Column, Column]:
         """``(parsed, canonical, matched)`` for the raw line."""
         # from_json returns NULL for malformed input and for non-object JSON
         # when the target type is a map — matching json.Unmarshal into
@@ -300,9 +310,6 @@ def _re2_compile(pattern: str) -> tuple[str, list[str]]:
     engine the kernel runs (Arrow's RE2, Go's regexp syntax). Raises
     ``ValueError`` for syntax RE2 rejects — lookaround, backrefs — as
     ``regexp.Compile`` fails Init (regex.go:32-35)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     re2 = _uncapture_unnamed(pattern)
     try:
         res = pc.extract_regex(pa.array([], type=pa.string()), pattern=re2)
@@ -312,7 +319,8 @@ def _re2_compile(pattern: str) -> tuple[str, list[str]]:
 
 
 def _compile_regex_struct_udf(pattern: str, group_names: list[str], allow_empty: bool):
-    """The regex kernel: the whole batch goes through Arrow's C++ RE2
+    """The regex kernel: an Arrow UDF (``pa.Array -> pa.StructArray``, no
+    pandas round trip) that runs the whole batch through Arrow's C++ RE2
     ``extract_regex`` — ZERO per-row Python. Returns
     struct<name:string,..., __canon:string>. ``__canon`` is NULL exactly
     when the row did not match (the extract struct's validity); on a match
@@ -326,26 +334,28 @@ def _compile_regex_struct_udf(pattern: str, group_names: list[str], allow_empty:
     order is the static sort of the group names (ASCII, same order
     Catalyst's array_sort(map_entries) yields); escapes and quoting match
     filters._escape_json_string exactly; ``allow_empty=False`` leaves out
-    the entries whose value is "" (regex.go:73-76)."""
+    the entries whose value is "" (regex.go:73-76).
+
+    The UDF is nondeterministic on purpose: the optimizer then neither
+    inlines it into each expression that reads it nor pushes a filter or
+    a union below it, so once its output is a column of its own it runs
+    once per row (see :meth:`ParserChain.apply`)."""
     struct_type = T.StructType(
         [T.StructField(n, T.StringType()) for n in [*group_names, "__canon"]]
     )
 
-    @F.pandas_udf(struct_type)
-    def parse(raw: pd.Series) -> pd.DataFrame:
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def esc(c):
+        for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                     ("\t", "\\t"), ("\r", "\\r")):
+            c = pc.replace_substring(c, pattern=a, replacement=b)
+        return c
 
-        def esc(c):
-            for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
-                         ("\t", "\\t"), ("\r", "\\r")):
-                c = pc.replace_substring(c, pattern=a, replacement=b)
-            return c
-
-        res = pc.extract_regex(pa.Array.from_pandas(raw, type=pa.string()), pattern=pattern)
+    def parse(raw: pa.Array) -> pa.Array:
+        res = pc.extract_regex(raw, pattern=pattern)
         # flatten() ANDs child validity with the struct's: no-match rows
         # come out as NULL in every field
-        by_name = dict(zip(group_names, res.flatten()))
+        groups = res.flatten()
+        by_name = dict(zip(group_names, groups))
         # one ',"k":"v"' part per entry ("" for a dropped empty value);
         # joined, the leading comma dropped and wrapped in {}
         parts = []
@@ -356,13 +366,10 @@ def _compile_regex_struct_udf(pattern: str, group_names: list[str], allow_empty:
             parts.append(part)
         body = pc.binary_join_element_wise(*parts, "") if parts else pa.scalar("")
         canon = pc.binary_join_element_wise("{", pc.utf8_slice_codeunits(body, 1), "}", "")
-        out = {n: c.to_pandas() for n, c in by_name.items()}
-        out["__canon"] = pc.if_else(
-            res.is_valid(), canon, pa.scalar(None, pa.string())
-        ).to_pandas()
-        return pd.DataFrame(out)
+        canon = pc.if_else(res.is_valid(), canon, pa.scalar(None, pa.string()))
+        return pa.StructArray.from_arrays([*groups, canon], names=[*group_names, "__canon"])
 
-    return parse
+    return F.arrow_udf(parse, struct_type).asNondeterministic()
 
 
 @dataclass(frozen=True)
@@ -384,18 +391,22 @@ class RegexParser:
     def __post_init__(self) -> None:
         _re2_compile(self.pattern)  # Init-time validation (regex.go:32-35)
 
-    def parse(self, raw: Column) -> tuple[Column, Column, Column]:
-        """``(parsed, canonical, matched)`` from ONE kernel evaluation:
-        the named groups become the map (a pure-Catalyst struct->map
+    def kernel(self, raw: Column) -> Column:
+        """The RE2 kernel's struct for the raw line (one Arrow UDF call)."""
+        pattern, group_names = _re2_compile(self.pattern)
+        return _compile_regex_struct_udf(pattern, group_names, self.allow_empty)(raw)
+
+    def derive(self, k: Column) -> tuple[Column, Column, Column]:
+        """``(parsed, canonical, matched)`` from the kernel's struct: the
+        named groups become the map (a pure-Catalyst struct->map
         conversion), ``__canon`` is the canonical and its NULL-ness the
         match flag."""
-        pattern, group_names = _re2_compile(self.pattern)
-        s = _compile_regex_struct_udf(pattern, group_names, self.allow_empty)(raw)
-        canonical = s.getField("__canon")
+        _, group_names = _re2_compile(self.pattern)
+        canonical = k.getField("__canon")
         matched = canonical.isNotNull()
         entries = F.map_from_arrays(
             F.array(*[F.lit(n) for n in group_names]),
-            F.array(*[s.getField(n) for n in group_names]),
+            F.array(*[k.getField(n) for n in group_names]),
         ).cast(PARSED_TYPE)  # with no named groups the arrays are array<void>
         if not self.allow_empty:
             entries = F.map_filter(entries, lambda _k, v: v != "")
@@ -406,8 +417,9 @@ class RegexParser:
 class ParserChain:
     """First-match-wins parser chain (engine.go:93-97).
 
-    Every parser exposes ``parse(raw) -> (parsed, canonical, matched)``
-    plus ``name``, ``time_key`` and ``time_format``.
+    Every parser exposes ``kernel(raw)`` and
+    ``derive(k) -> (parsed, canonical, matched)`` plus ``name``,
+    ``time_key`` and ``time_format``.
     ``apply(df, raw_col, ingest_time_col)`` adds:
     - ``parsed`` map<string,string> (NULL when no parser matched — the row
       is KEPT, matching the reference),
@@ -421,20 +433,20 @@ class ParserChain:
     parsers: list = field(default_factory=list)
 
     def apply(self, df, raw_col: str = "raw", ingest_time_col: str = "ingest_time"):
-        # Each parser's candidate struct is materialized as its OWN column
-        # (round-7 optimization): the candidate is referenced at least
-        # twice downstream (the next parser's input mask + the final
-        # coalesce), and CollapseProject keeps a multi-referenced non-cheap
-        # alias materialized instead of inlining it — so when a later
-        # parser is a Python UDF (its extraction splits the projection
-        # around an ArrowEvalPython node, whose output projection is NOT
-        # whole-stage-codegen'd and has no common-subexpression
-        # elimination), the earlier parser's from_json/variant work is
+        # Each parser's kernel output (``_k{i}``) and candidate struct
+        # (``_cand{i}``) are materialized as their OWN columns. The kernel
+        # column is what makes a Python kernel run once per row: the
+        # nondeterministic UDF is never inlined into its readers (derive
+        # reads it once per group plus the canonical), and no filter or
+        # union is pushed below it, so a grep filter over ``canonical``
+        # stays above the single ArrowEvalPython node. The candidate is
+        # referenced at least twice downstream (the next parser's input
+        # mask + the final coalesce), and CollapseProject keeps a
+        # multi-referenced non-cheap alias materialized instead of
+        # inlining it — so an earlier parser's from_json/variant work is
         # computed ONCE in the codegen stage below the Python node and
-        # flows through it as a plain attribute. The round-6 inline-
-        # expression composition re-evaluated the json parse 3x per row
-        # around the UDF boundary (measured: the 2-parser chain cost 6 s/M
-        # rows more than the sum of its 1-parser chains).
+        # flows through it as a plain attribute (inline composition
+        # re-evaluated the json parse 3x per row around the UDF boundary).
         if not self.parsers:
             return (
                 df.withColumn("parsed", F.lit(None).cast(PARSED_TYPE))
@@ -444,12 +456,13 @@ class ParserChain:
             )
         out = df
         cand_names: list[str] = []
+        kernel_names: list[str] = []
         for i, p in enumerate(self.parsers):
             # first-match-wins short circuit that survives UDF extraction:
-            # a pandas UDF is computed in its own ArrowEvalPython node for
+            # an Arrow UDF is computed in its own ArrowEvalPython node for
             # EVERY row regardless of the later coalesce, so mask the input
-            # to NULL for rows an earlier parser already matched — the
-            # kernel's None fast-path skips them.
+            # to NULL for rows an earlier parser already matched — RE2
+            # passes NULL through without matching.
             if cand_names:
                 prev = (
                     F.coalesce(*[F.col(c) for c in cand_names])
@@ -459,7 +472,10 @@ class ParserChain:
                 raw = F.when(prev.isNull(), F.col(raw_col))
             else:
                 raw = F.col(raw_col)
-            parsed, canonical, matched = p.parse(raw)
+            kname = f"_k{i}"
+            out = out.withColumn(kname, p.kernel(raw))
+            kernel_names.append(kname)
+            parsed, canonical, matched = p.derive(F.col(kname))
             event_time = F.col(ingest_time_col)
             if p.time_key and p.time_format:
                 event_time = F.coalesce(
@@ -490,5 +506,5 @@ class ParserChain:
             .withColumn(
                 "event_time", F.coalesce(F.col("_p.event_time"), F.col(ingest_time_col))
             )
-            .drop("_p", *cand_names)
+            .drop("_p", *kernel_names, *cand_names)
         )

@@ -10,12 +10,17 @@
   At 10^12 rows the bucket map-side partitions the corpus; brute force
   remains the per-bucket kernel.
 
-The brute-force and LSH scoring is pure Catalyst (``int_dot``:
-zip_with/aggregate). Python runs in three places: ``int_dot_arrow`` (a
-pandas UDF, the vectorized dot for high-fanout join outputs such as the
-IVF assignment) and the numpy block-matmul kernels of
+The brute-force and LSH scoring and the IVF assignment are pure Catalyst
+(``int_dot``: zip_with/aggregate), so the ANN train/assign/search plans
+hold no Python. Python runs in three places: ``int_dot_arrow`` (a pandas
+UDF, the vectorized dot that the embedding-dedup path passes to
+``ivf_assign`` and that ``split_hot_buckets`` uses for its sub-seed
+distances) and the numpy block-matmul kernels of
 ``all_pairs_cosine_micro`` and ``bucketed_cosine_pairs``, run per group
-through ``applyInPandas``.
+through ``applyInPandas``. The dot is chosen per call site, by measurement:
+on a small ANN increment the Python boundary costs more than the JVM's
+per-element loop, on the dedup path's full-corpus assignment the einsum
+wins.
 """
 
 from __future__ import annotations
@@ -436,7 +441,7 @@ def bucketed_cosine_pairs(
     """
     import numpy as np
 
-    assigned = ivf_assign(emb, id_col, vec_col, k, nprobe=nprobe)
+    assigned = ivf_assign(emb, id_col, vec_col, k, nprobe=nprobe, dot=int_dot_arrow)
     keys = ["centroid"]
     if split_cap is not None:
         assigned = split_hot_buckets(assigned, split_cap)
@@ -495,9 +500,15 @@ def ivf_assign(
     k: int = IVF_K,
     centroids: DataFrame | None = None,
     nprobe: int = 1,
+    *,
+    dot=int_dot,
 ) -> DataFrame:
     """IVF coarse assignment: nearest centroid under exact-int squared L2
     ``d = |a|^2 + |c|^2 - 2<a,c>``. Ties break by centroid index.
+    ``dot`` computes ``<a,c>``: the Catalyst :func:`int_dot` by default,
+    so the ANN index paths (increments, frozen and IVF+PQ search) run no
+    Python; :func:`bucketed_cosine_pairs` passes :func:`int_dot_arrow`
+    (bit-identical), which is faster over its full-corpus assignment.
     ``nprobe > 1`` emits one row per (vector, probed centroid) for the
     nprobe nearest buckets — the multi-probe recall knob (near-boundary
     vectors become candidates in every nearby bucket).
@@ -523,7 +534,7 @@ def ivf_assign(
             )
         )
     joined = qz.join(F.broadcast(cents)).withColumn(
-        "dist", F.col("norm2") + F.col("cn") - 2 * int_dot_arrow(F.col("v"), F.col("cv"))
+        "dist", F.col("norm2") + F.col("cn") - 2 * dot(F.col("v"), F.col("cv"))
     )
     if nprobe == 1:
         # min_by over a (dist, cidx) struct = the same argmin + tie-break as

@@ -33,8 +33,8 @@ def get_spark(
     - UTC session timezone: required for byte-exact timestamp parity with
       the DuckDB oracle and with the reference's RFC3339 output
       (internal/output/stdout/stdout.go:124 serializes UTC-normalized).
-    - Arrow enabled: all Python-side kernels are pandas UDFs (vectorized);
-      there is no row-at-a-time Python in any hot path.
+    - Arrow enabled: all Python-side kernels are Arrow or pandas UDFs
+      (vectorized); there is no row-at-a-time Python in any hot path.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"

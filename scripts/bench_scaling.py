@@ -16,7 +16,7 @@ evidence no longer depends on WHICH leg a stall happened to hit.
 
 The job is the flagship pipeline over a pre-generated tokens parquet table:
 read -> serialize to raw JSON log lines -> parse (typed from_json) +
-vectorized regex parse (pandas UDF, the custom kernel) -> tag -> route to
+vectorized regex parse (Arrow UDF, the custom kernel) -> tag -> route to
 sinks -> per-sink and per-source aggregate counts. Measurement discipline:
 dataset sized so parse dominates; page cache warmed by an untimed pre-read;
 session startup excluded; same shuffle-partition count per core level.
@@ -79,10 +79,12 @@ def flagship_job(spark):
         F.concat(F.lit("tok-"), F.col("parsed.source")).alias("tag"),
         "raw",
     )
-    # stage 2: vectorized regex parse (pandas UDF — the custom kernel):
-    # extract doc_id + source from the raw line via named groups
+    # stage 2: vectorized regex parse (Arrow UDF — the custom kernel):
+    # extract doc_id + source from the raw line via named groups; the
+    # kernel output is its own column so the UDF runs once per row
     rx = RegexParser(pattern=r'"doc_id":"(?P<doc_id>[^"]+)".*"source":"(?P<src>[^"]+)"')
-    parsed = parsed.withColumn("rx", rx.parse(F.col("raw"))[0]).drop("raw")
+    parsed = parsed.withColumn("_k", rx.kernel(F.col("raw")))
+    parsed = parsed.withColumn("rx", rx.derive(F.col("_k"))[0]).drop("raw", "_k")
     parsed = parsed.withColumn("rx_ok", F.col("rx")["doc_id"] == F.col("doc_id")).drop("rx")
     # stage 3: broadcast enrichment on source
     lookup = spark.createDataFrame(

@@ -24,7 +24,7 @@ AUDIT = {
     "range_join_windows": "bucketed interval join: equi-join on (key, bucket), no nested loop",
     "rollup_hour_day_week": "continuous aggregates: day/week re-aggregate the hourly partials",
     "tokens_mix_sample": "hash-gate mixing: the sample filter is a pure scan-stage predicate",
-    "ann_ivfpq_topk": "IVF+PQ: coarse probes bound candidates; PQ codes join a broadcast per-query LUT; corpus floats untouched at query time",
+    "ann_ivfpq_topk": "IVF+PQ: coarse probes bound candidates; PQ codes join a broadcast per-query LUT; corpus floats untouched at query time; Python-free (the coarse assignment uses the Catalyst int_dot, no EvalPython node)",
     "decontaminate": "shingle-hash semi-join against the broadcast benchmark set",
     "hll_user_sketch": "HLL registers: one narrow pass + partial-max aggregation",
     "tokens_pack_concat": "two-level distributed prefix sum: (source, block) window + per-source cumsum over block subtotals, broadcast join back — no single-task-per-source sort",

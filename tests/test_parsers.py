@@ -460,3 +460,29 @@ def test_regex_no_named_groups(spark):
     assert rows["ERROR x"]["parser"] == "regex"
     assert rows["INFO y"]["parsed"] is None
     assert rows["INFO y"]["canonical"] == "null"
+
+
+def test_regex_kernel_all_null_batch(spark):
+    # every line is JSON, so the chain masks the regex kernel's whole
+    # input to NULL: the Arrow kernel gets an all-NULL array and must
+    # return an all-NULL canonical of the same length
+    raws = ['{"a":"1"}', '{"b":2}', "null"]
+    rows = _run_chain(spark, raws, [JsonParser(), RegexParser(pattern=r"(?P<w>\w+)")])
+    assert {raw: r["parser"] for raw, r in rows.items()} == dict.fromkeys(raws, "json")
+    assert rows['{"b":2}']["canonical"] == '{"b":2}'
+
+    p = RegexParser(pattern=r"(?P<w>\w+)")
+    df = spark.range(3).select(p.kernel(F.lit(None).cast("string")).alias("k"))
+    assert [r["k"].asDict() for r in df.collect()] == [{"w": None, "__canon": None}] * 3
+
+
+@pytest.mark.parametrize("allow_empty", [True, False])
+def test_regex_kernel_zero_named_groups(spark, allow_empty):
+    # with no named groups the kernel's struct holds only __canon: "{}"
+    # on a match, NULL otherwise (NULL input included)
+    p = RegexParser(pattern=r"^ERR(OR)?", allow_empty=allow_empty)
+    df = spark.createDataFrame([("ERROR x",), ("INFO y",), (None,)], "raw string")
+    out = df.select("raw", p.kernel(F.col("raw")).alias("k"))
+    assert out.schema["k"].dataType.fieldNames() == ["__canon"]
+    got = {r["raw"]: r["k"]["__canon"] for r in out.collect()}
+    assert got == {"ERROR x": "{}", "INFO y": None, None: None}

@@ -309,3 +309,141 @@ def test_frame_sample_zero_shuffle_plan(spark):
     # exactly two kernels: synth_media's builder + the frame decoder
     assert plan.count("MapInPandas") == 2
     assert "Generate explode" in plan and "element_at" in plan
+
+
+_KERNEL_PATTERN = r"^(?P<level>[A-Z]+) (?P<msg>.+)$"
+_GREP = '"level":"(error|ERROR|warn|WARN)"'
+
+
+def _assert_one_kernel_below_grep(plan: str) -> None:
+    """One ArrowEvalPython holding one regex-kernel call, with the grep
+    Filter above it (a parent node prints before its child)."""
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("parse(") == 1
+    lines = plan.splitlines()
+    udf = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    grep = next(i for i, ln in enumerate(lines) if "Filter" in ln and "RLIKE" in ln)
+    assert grep < udf
+
+
+def test_tagged_chain_parses_once_above_grep(spark, tmp_path, monkeypatch):
+    """Two tagged inputs, a json -> regex chain and a Match-gated grep:
+    the regex kernel runs once per row, above the union, and the grep
+    filter reads its output instead of re-running the chain below the
+    parse (the filter is neither pushed through the nondeterministic
+    kernel projection nor into the union's branches)."""
+    from go_log_forwarder_spark.plans.config import build_pipeline, load_plan
+
+    for name in ("web", "db"):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "a.log").write_text('{"level":"error"}\nWARN x\nINFO y\nnot parsed\n')
+        monkeypatch.setenv(f"GLFS_{name.upper()}", str(tmp_path / name / "*.log"))
+    cfg = f"""
+Inputs:
+  - Type: tail
+    Tag: app.web
+    Glob: "${{GLFS_WEB}}"
+  - Type: tail
+    Tag: app.db
+    Glob: "${{GLFS_DB}}"
+Parsers:
+  - Type: json
+  - Type: regex
+    Pattern: '{_KERNEL_PATTERN}'
+Filters:
+  - Type: grep
+    Match: app.web
+    Op: any
+    Include: ['{_GREP}']
+Outputs:
+  - Type: counter
+    Match: '*'
+"""
+    df = build_pipeline(spark, load_plan(text=cfg))
+    _assert_one_kernel_below_grep(plan_of(df))
+    # web keeps its error/warn lines, db bypasses the filter
+    got = sorted((r["tag"], r["raw"], r["parser"]) for r in df.collect())
+    assert got == [
+        ("app.db", "INFO y", "regex"), ("app.db", "WARN x", "regex"),
+        ("app.db", "not parsed", None), ("app.db", '{"level":"error"}', "json"),
+        ("app.web", "WARN x", "regex"), ("app.web", '{"level":"error"}', "json"),
+    ]
+
+
+def test_stream_plan_parses_once_above_grep(spark, tmp_path):
+    """The same single kernel evaluation in the plan run_foreach_batch
+    executes per micro-batch."""
+    from go_log_forwarder_spark.functions.filters import FilterChain, GrepFilter
+    from go_log_forwarder_spark.functions.parsers import RegexParser
+    from go_log_forwarder_spark.streaming.pipeline import run_foreach_batch
+
+    spark.createDataFrame(
+        [(1, '{"level":"error"}', "app.web"), (2, "WARN x", "app.web"),
+         (3, "INFO y", "app.web"), (4, "INFO z", "app.db")],
+        "id long, raw string, tag string",
+    ).withColumn("ingest_time", F.current_timestamp()).coalesce(1).write.parquet(
+        str(tmp_path / "in")
+    )
+    src = spark.readStream.schema(
+        "id long, raw string, tag string, ingest_time timestamp"
+    ).parquet(str(tmp_path / "in"))
+    chain = ParserChain([JsonParser(), RegexParser(pattern=_KERNEL_PATTERN)])
+    grep = FilterChain([GrepFilter(include=(_GREP,), op="any", match="app.web")])
+    q = run_foreach_batch(
+        src, lambda df: grep.apply(chain.apply(df)), [SinkSpec("all", "*")],
+        str(tmp_path / "out"), str(tmp_path / "ckpt"), trigger_seconds=0,
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    _assert_one_kernel_below_grep(plan)
+    assert sorted(
+        r["id"] for r in spark.read.parquet(str(tmp_path / "out" / "all")).collect()
+    ) == [1, 2, 4]
+
+
+@pytest.mark.parametrize("query", ["regex_parse_groups", "grok_parse_groups"])
+def test_regex_queries_call_the_kernel_once(spark, tmp_path, query):
+    import datetime
+
+    import __spark_entry__ as entry_mod
+
+    spark.createDataFrame(
+        [(1, 7, "click", datetime.datetime(2024, 1, 1))],
+        "event_id long, user_id long, event_type string, ts timestamp",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    plan = plan_of(entry_mod.queries()[query](spark, str(tmp_path)))
+    assert plan.count("parse(") == 1
+
+
+def test_ann_index_paths_are_python_free(spark, tmp_path):
+    """The ANN increment, frozen search and IVF+PQ plans assign with the
+    Catalyst dot: no Python boundary. The embedding-dedup path keeps the
+    Arrow dot over its full-corpus assignment."""
+    from go_log_forwarder_spark.functions import similarity as sim
+    from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
+
+    written = []
+
+    class RecordingStore(ParquetSnapshotStore):
+        def append(self, df, table, *args, **kwargs):
+            written.append(plan_of(df))
+            return super().append(df, table, *args, **kwargs)
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 3) % 11), float(i % 5), 1.0]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = emb.filter(F.col("vec_id") < 3)
+    store = RecordingStore(str(tmp_path))
+    sim.ann_index_train(store, emb, k=4, iters=1)
+    sim.ann_index_assign_increment(spark, store, emb)
+    increment = written[-1]
+    assert "centroid" in increment and "EvalPython" not in increment
+    assert "EvalPython" not in plan_of(sim.ann_frozen_topk(spark, store, queries, k=3))
+    assert "EvalPython" not in plan_of(
+        sim.ivfpq_topk(emb, queries, topk=3, nprobe=2, kc=2, S=3, k=2)
+    )
+    assert "EvalPython" in plan_of(sim.bucketed_cosine_pairs(emb, 900000, k=4))
