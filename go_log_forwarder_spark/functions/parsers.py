@@ -26,8 +26,8 @@ the canonical. The regex kernel is ONE nondeterministic Arrow UDF
 (``pa.Array -> pa.StructArray``, no pandas) that hands the whole batch to
 RE2 ``extract_regex`` (Go's regexp syntax, so patterns mean what they mean
 in the reference) and returns the named groups plus the canonical text —
-the only Python in the hot path. The chain is a ``coalesce`` over
-per-parser candidate structs.
+the only Python in the hot path. Each chain output is a ``coalesce``
+over one field of the per-parser candidate structs.
 """
 
 from __future__ import annotations
@@ -493,18 +493,17 @@ class ParserChain:
             name = f"_cand{i}"
             out = out.withColumn(name, candidate)
             cand_names.append(name)
-        result = (
-            F.coalesce(*[F.col(c) for c in cand_names])
-            if len(cand_names) > 1
-            else F.col(cand_names[0])
-        )
+        # the masked inputs leave at most one candidate non-NULL per row, so
+        # the first non-NULL field is the matching parser's: each output is
+        # a coalesce of plain fields, which a filter on ``canonical`` reads
+        # without rebuilding the candidate structs
+        def first(f, *default):
+            return F.coalesce(*[F.col(c).getField(f) for c in cand_names], *default)
+
         return (
-            out.withColumn("_p", result)
-            .withColumn("parsed", F.col("_p.parsed"))
-            .withColumn("parser", F.col("_p.parser"))
-            .withColumn("canonical", F.coalesce(F.col("_p.canonical"), F.lit("null")))
-            .withColumn(
-                "event_time", F.coalesce(F.col("_p.event_time"), F.col(ingest_time_col))
-            )
-            .drop("_p", *kernel_names, *cand_names)
+            out.withColumn("parsed", first("parsed"))
+            .withColumn("parser", first("parser"))
+            .withColumn("canonical", first("canonical", F.lit("null")))
+            .withColumn("event_time", first("event_time", F.col(ingest_time_col)))
+            .drop(*kernel_names, *cand_names)
         )

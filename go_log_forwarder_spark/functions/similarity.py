@@ -12,15 +12,11 @@
 
 The brute-force and LSH scoring and the IVF assignment are pure Catalyst
 (``int_dot``: zip_with/aggregate), so the ANN train/assign/search plans
-hold no Python. Python runs in three places: ``int_dot_arrow`` (a pandas
-UDF, the vectorized dot that the embedding-dedup path passes to
-``ivf_assign`` and that ``split_hot_buckets`` uses for its sub-seed
-distances) and the numpy block-matmul kernels of
-``all_pairs_cosine_micro`` and ``bucketed_cosine_pairs``, run per group
-through ``applyInPandas``. The dot is chosen per call site, by measurement:
-on a small ANN increment the Python boundary costs more than the JVM's
-per-element loop, on the dedup path's full-corpus assignment the einsum
-wins.
+and the embedding-dedup assignment hold no Python. Python runs in three
+places: ``int_dot_arrow`` (a pandas UDF, the vectorized dot that
+``split_hot_buckets`` uses for its sub-seed distances) and the numpy
+block-matmul kernels of ``all_pairs_cosine_micro`` and
+``bucketed_cosine_pairs``, run per group through ``applyInPandas``.
 """
 
 from __future__ import annotations
@@ -53,9 +49,8 @@ def int_dot(a: Column, b: Column) -> Column:
 
 def int_dot_arrow(a: Column, b: Column) -> Column:
     """Vectorized twin of :func:`int_dot` (round 7): the Catalyst
-    zip_with+aggregate pair is interpreted per element, which dominates
-    high-fanout join outputs (the IVF assignment and hot-bucket
-    sub-assignment evaluate one dot per (vector, centroid/seed) pair).
+    zip_with+aggregate pair is interpreted per element; the hot-bucket
+    sub-assignment evaluates one dot per (vector, seed) pair.
     Batches cross as Arrow and the products are one int64 einsum — same
     wrap-around int64 arithmetic, bit-identical results (pinned in
     tests/test_tokenops.py::test_int_dot_arrow_parity)."""
@@ -441,7 +436,7 @@ def bucketed_cosine_pairs(
     """
     import numpy as np
 
-    assigned = ivf_assign(emb, id_col, vec_col, k, nprobe=nprobe, dot=int_dot_arrow)
+    assigned = ivf_assign(emb, id_col, vec_col, k, nprobe=nprobe)
     keys = ["centroid"]
     if split_cap is not None:
         assigned = split_hot_buckets(assigned, split_cap)
@@ -500,15 +495,12 @@ def ivf_assign(
     k: int = IVF_K,
     centroids: DataFrame | None = None,
     nprobe: int = 1,
-    *,
-    dot=int_dot,
 ) -> DataFrame:
     """IVF coarse assignment: nearest centroid under exact-int squared L2
     ``d = |a|^2 + |c|^2 - 2<a,c>``. Ties break by centroid index.
-    ``dot`` computes ``<a,c>``: the Catalyst :func:`int_dot` by default,
-    so the ANN index paths (increments, frozen and IVF+PQ search) run no
-    Python; :func:`bucketed_cosine_pairs` passes :func:`int_dot_arrow`
-    (bit-identical), which is faster over its full-corpus assignment.
+    ``<a,c>`` is the Catalyst :func:`int_dot`, so every caller (the ANN
+    increments, frozen and IVF+PQ search, the embedding dedup) assigns
+    without a Python boundary.
     ``nprobe > 1`` emits one row per (vector, probed centroid) for the
     nprobe nearest buckets — the multi-probe recall knob (near-boundary
     vectors become candidates in every nearby bucket).
@@ -534,7 +526,7 @@ def ivf_assign(
             )
         )
     joined = qz.join(F.broadcast(cents)).withColumn(
-        "dist", F.col("norm2") + F.col("cn") - 2 * dot(F.col("v"), F.col("cv"))
+        "dist", F.col("norm2") + F.col("cn") - 2 * int_dot(F.col("v"), F.col("cv"))
     )
     if nprobe == 1:
         # min_by over a (dist, cidx) struct = the same argmin + tie-break as

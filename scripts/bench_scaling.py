@@ -80,12 +80,14 @@ def flagship_job(spark):
         "raw",
     )
     # stage 2: vectorized regex parse (Arrow UDF — the custom kernel):
-    # extract doc_id + source from the raw line via named groups; the
-    # kernel output is its own column so the UDF runs once per row
+    # extract doc_id + source from the raw line via named groups
     rx = RegexParser(pattern=r'"doc_id":"(?P<doc_id>[^"]+)".*"source":"(?P<src>[^"]+)"')
-    parsed = parsed.withColumn("_k", rx.kernel(F.col("raw")))
-    parsed = parsed.withColumn("rx", rx.derive(F.col("_k"))[0]).drop("raw", "_k")
-    parsed = parsed.withColumn("rx_ok", F.col("rx")["doc_id"] == F.col("doc_id")).drop("rx")
+    parsed = ParserChain([rx]).apply(
+        parsed.withColumn("ingest_time", F.lit(None).cast("timestamp"))
+    )
+    parsed = parsed.withColumn("rx_ok", F.col("parsed")["doc_id"] == F.col("doc_id")).drop(
+        "raw", "ingest_time", "parsed", "parser", "canonical", "event_time"
+    )
     # stage 3: broadcast enrichment on source
     lookup = spark.createDataFrame(
         [(name, f"team-{i}") for i, (_, name) in enumerate(SOURCE_BUCKETS)],

@@ -317,13 +317,16 @@ _GREP = '"level":"(error|ERROR|warn|WARN)"'
 
 def _assert_one_kernel_below_grep(plan: str) -> None:
     """One ArrowEvalPython holding one regex-kernel call, with the grep
-    Filter above it (a parent node prints before its child)."""
+    Filter above it (a parent node prints before its child). The filter
+    reads the canonical text without rebuilding the parse result (no
+    candidate struct, no parsed map)."""
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("parse(") == 1
     lines = plan.splitlines()
     udf = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
     grep = next(i for i, ln in enumerate(lines) if "Filter" in ln and "RLIKE" in ln)
     assert grep < udf
+    assert "struct(" not in lines[grep] and "map_from_arrays" not in lines[grep]
 
 
 def test_tagged_chain_parses_once_above_grep(spark, tmp_path, monkeypatch):
@@ -419,9 +422,9 @@ def test_regex_queries_call_the_kernel_once(spark, tmp_path, query):
 
 
 def test_ann_index_paths_are_python_free(spark, tmp_path):
-    """The ANN increment, frozen search and IVF+PQ plans assign with the
-    Catalyst dot: no Python boundary. The embedding-dedup path keeps the
-    Arrow dot over its full-corpus assignment."""
+    """The ANN increment, frozen search, IVF+PQ and embedding-dedup plans
+    assign with the Catalyst dot: no Python boundary (the dedup plan's
+    per-bucket numpy kernel is a grouped map, not an EvalPython)."""
     from go_log_forwarder_spark.functions import similarity as sim
     from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
 
@@ -446,4 +449,5 @@ def test_ann_index_paths_are_python_free(spark, tmp_path):
     assert "EvalPython" not in plan_of(
         sim.ivfpq_topk(emb, queries, topk=3, nprobe=2, kc=2, S=3, k=2)
     )
-    assert "EvalPython" in plan_of(sim.bucketed_cosine_pairs(emb, 900000, k=4))
+    dedup = plan_of(sim.bucketed_cosine_pairs(emb, 900000, k=4))
+    assert "FlatMapGroupsInPandas" in dedup and "EvalPython" not in dedup
