@@ -10,18 +10,23 @@
   At 10^12 rows the bucket map-side partitions the corpus; brute force
   remains the per-bucket kernel.
 
-The brute-force and LSH scoring and the IVF assignment are pure Catalyst
-(``int_dot``: zip_with/aggregate), so the ANN train/assign/search plans
-and the embedding-dedup assignment hold no Python. Python runs in three
-places: ``int_dot_arrow`` (a pandas UDF, the vectorized dot that
-``split_hot_buckets`` uses for its sub-seed distances) and the numpy
-block-matmul kernels of ``all_pairs_cosine_micro`` and
-``bucketed_cosine_pairs``, run per group through ``applyInPandas``.
+The brute-force and LSH scoring, the IVF assignment and the hot-bucket
+split are pure Catalyst (``int_dot``: zip_with/aggregate), so the ANN
+train/assign/search plans and the embedding-dedup assignment hold no
+Python. Python runs only in the numpy block-matmul kernels of
+``all_pairs_cosine_micro`` and ``bucketed_cosine_pairs``, run per group
+through ``applyInPandas``.
+
+Each exact-int primitive exists once: the nearest-codeword op
+(:func:`_nearest`), the seed codebook (:func:`_seed_codebook`), the grouped
+integer Lloyd trainer (:func:`_lloyd`), the ADC scorer (:func:`_adc_topk`),
+the per-query top-k rank (:func:`_topk`) and the numpy cosine block
+(:func:`_cos_micro`). IVF and PQ differ only in the group keys they pass
+(PQ's subspace ``s``) and in their column names.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,27 +52,6 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
-def int_dot_arrow(a: Column, b: Column) -> Column:
-    """Vectorized twin of :func:`int_dot` (round 7): the Catalyst
-    zip_with+aggregate pair is interpreted per element; the hot-bucket
-    sub-assignment evaluates one dot per (vector, seed) pair.
-    Batches cross as Arrow and the products are one int64 einsum — same
-    wrap-around int64 arithmetic, bit-identical results (pinned in
-    tests/test_tokenops.py::test_int_dot_arrow_parity)."""
-
-    @F.pandas_udf("bigint")
-    def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(xs) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.stack([np.asarray(v, dtype=np.int64) for v in xs])
-        B = np.stack([np.asarray(v, dtype=np.int64) for v in ys])
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    return _dot(a, b)
-
-
 def cosine_col(qa: Column, qb: Column) -> Column:
     """Exact-int cosine of two QUANTIZED vectors, as micro fixed-point
     (floor(c*1e6+0.5) — see textstats.micro_col for why not ROUND)."""
@@ -75,6 +59,165 @@ def cosine_col(qa: Column, qb: Column) -> Column:
         int_dot(qa, qa).cast("double") * int_dot(qb, qb).cast("double")
     )
     return F.floor(c * 1000000.0 + 0.5).cast("bigint")
+
+
+# --- the exact-int ANN core --------------------------------------------------
+
+_Q = ("query_id", "qv", "qn")  # query-side names of (id, v, norm2)
+
+
+def _quantized(
+    emb: DataFrame, id_col: str, vec_col: str, names: tuple = ("id", "v", "norm2")
+) -> DataFrame:
+    """(id, v, norm2) under ``names``: the quantized vector and its exact-int
+    |v|^2 (Catalyst prunes norm2 where nothing reads it)."""
+    i, v, n = names
+    return emb.select(
+        F.col(id_col).alias(i), quantize(F.col(vec_col)).alias(v)
+    ).withColumn(n, int_dot(F.col(v), F.col(v)))
+
+
+def _seed_codebook(rows: DataFrame, k: int, keys: tuple = ()) -> DataFrame:
+    """The seed codebook (*keys, cidx, cv, cn) of rows (id, *keys, v,
+    norm2): the first k rows by id — the deterministic, oracle-reproducible
+    init of every untrained quantizer and every Lloyd run (the oracle's
+    ``WHERE id < k`` CTEs)."""
+    return rows.filter(F.col("id") < k).select(
+        *keys,
+        F.col("id").cast("int").alias("cidx"),
+        F.col("v").alias("cv"),
+        F.col("norm2").alias("cn"),
+    )
+
+
+def _with_cn(cents: DataFrame) -> DataFrame:
+    """A supplied or trained codebook plus cn = exact-int |cv|^2."""
+    return cents.withColumn("cn", int_dot(F.col("cv"), F.col("cv")))
+
+
+def _nearest(
+    rows: DataFrame,
+    cents: DataFrame,
+    n: int,
+    out: list,
+    keys: tuple = (),
+    row_id: str = "id",
+    v: str = "v",
+    norm: str = "norm2",
+) -> DataFrame:
+    """The nearest-codeword op: per (``row_id``, *``keys``) row, the ``n``
+    codewords of ``cents`` (*keys, cidx, cv, cn — tiny, broadcast) nearest
+    to the row's vector ``v`` (squared norm ``norm``) under exact-int
+    squared L2 ``dist = |v|^2 + cn - 2<v, cv>``, ties to the lower cidx.
+    Returns (row_id, *keys, *out); ``out`` may read ``cidx`` and ``dist``.
+
+    n == 1 is a min_by over a (dist, cidx) struct: the same argmin and
+    tie-break as the row_number window, but a map-side-combinable hash
+    aggregate — the shuffle moves one row per key instead of the joined
+    relation, and no per-key sort runs. n > 1 (multi-probe) is the window."""
+    by = [row_id, *keys]
+    # no keys: a plain cross join with the codebook (join(other, []) raises)
+    joined = rows.join(F.broadcast(cents), list(keys) or None).withColumn(
+        "dist", F.col(norm) + F.col("cn") - 2 * int_dot(F.col(v), F.col("cv"))
+    )
+    if n == 1:
+        m = F.min_by(F.struct(*out), F.struct("dist", "cidx"))
+        return joined.groupBy(*by).agg(m.alias("_m")).select(*by, "_m.*")
+    w = Window.partitionBy(*by).orderBy(F.asc("dist"), F.asc("cidx"))
+    return (
+        joined.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .select(*by, *out)
+    )
+
+
+def _lloyd(rows: DataFrame, k: int, iters: int, keys: tuple = ()) -> DataFrame:
+    """Integer Lloyd steps, grouped by ``keys``: rows (id, *keys, v, norm2)
+    -> codebook (*keys, cidx int, cv array<bigint>).
+
+    Deterministic and engine-portable by construction: init =
+    :func:`_seed_codebook`; assignment = :func:`_nearest`; update =
+    per-dimension floor(int_sum / count) (the floor of an exact int ratio in
+    doubles — sums and counts stay far below 2^53); an empty codeword keeps
+    its previous value. Each step is one broadcast assign + one posexplode
+    aggregation, the codeword arrays rebuilt with a deterministic sort — no
+    driver-side math, and the oracle unrolls the identical steps
+    (:func:`kmeans_cte_sql`, :func:`pq_kmeans_cte_sql`)."""
+    rows = rows.localCheckpoint(eager=True)
+    # cn is recomputed for each step's codebook
+    cents = _seed_codebook(rows, k, keys).drop("cn").localCheckpoint(eager=True)
+    for _ in range(iters):
+        assigned = _nearest(
+            rows, _with_cn(cents), 1, ["v", F.col("cidx").alias("centroid")], keys
+        )
+        dims = assigned.select(*keys, "centroid", F.posexplode("v").alias("pos", "x"))
+        sums = dims.groupBy(*keys, "centroid", "pos").agg(
+            F.sum("x").alias("sm"), F.count(F.lit(1)).alias("n")
+        )
+        new_cents = (
+            sums.withColumn(
+                "cval", F.floor(F.col("sm").cast("double") / F.col("n")).cast("bigint")
+            )
+            .groupBy(*keys, "centroid")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "cval"))),
+                    lambda e: e.getField("cval"),
+                ).alias("cv")
+            )
+            .select(*keys, F.col("centroid").alias("cidx"), "cv")
+        )
+        cents = (
+            cents.select(*keys, "cidx", F.col("cv").alias("cv_old"))
+            .join(new_cents, [*keys, "cidx"], "left")
+            .select(*keys, "cidx", F.coalesce("cv", "cv_old").alias("cv"))
+            .localCheckpoint(eager=True)
+        )
+    return cents
+
+
+def _topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Per query_id, the k best neighbor_ids by (``score`` desc,
+    neighbor_id asc), numbered 1..k in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _adc_topk(
+    codes: DataFrame, qsubs: DataFrame, cents: DataFrame, topk: int,
+    on: tuple = ("s", "code"),
+) -> DataFrame:
+    """The ADC scorer: each query's S x k lookup table of exact-int
+    sub-dot-products (qsubs (id, s, v) x the codebook (s, cidx, cv)),
+    joined to the document codes (id, s, code, ...) on ``on`` and summed —
+    a document's approximate dot is the sum of its S table lookups, so the
+    corpus floats are never touched at query time. Emits (query_id,
+    neighbor_id, approx_dot, rank)."""
+    lut = qsubs.join(F.broadcast(cents), "s").select(
+        F.col("id").alias("query_id"), "s", F.col("cidx").alias("code"),
+        int_dot(F.col("v"), F.col("cv")).alias("part"),
+    )
+    scored = (
+        codes.join(F.broadcast(lut), list(on))
+        .filter(F.col("id") != F.col("query_id"))
+        .groupBy("query_id", F.col("id").alias("neighbor_id"))
+        .agg(F.sum("part").cast("bigint").alias("approx_dot"))
+    )
+    return _topk(scored, "approx_dot", topk)
+
+
+def _cos_micro(A, a_n, C, c_n):
+    """The numpy cosine block: micro cosines of every (A row, C row) pair
+    from exact int64 dots and the rows' exact-int squared norms. Each norm
+    is cast to float64 before the product (as the DuckDB oracle does), so
+    the division and sqrt are IEEE-identical to it and no int64 product of
+    two norms can wrap."""
+    import numpy as np
+
+    cos = (A @ C.T).astype(np.float64) / np.sqrt(
+        a_n[:, None].astype(np.float64) * c_n[None, :].astype(np.float64)
+    )
+    return np.floor(cos * 1000000.0 + 0.5).astype(np.int64)
 
 
 def brute_force_topk(
@@ -97,11 +240,7 @@ def brute_force_topk(
         .withColumn("cosine_micro", cosine_col(F.col("qv"), F.col("cv")))
         .select("query_id", "neighbor_id", "cosine_micro")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, "cosine_micro", k)
 
 
 def sign_bucket(v: Column) -> Column:
@@ -137,8 +276,7 @@ def lsh_topk(
         .withColumn("cosine_micro", cosine_col(F.col("qv"), F.col("cv")))
         .select("query_id", "neighbor_id", "cosine_micro")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_micro"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, "cosine_micro", k)
 
 
 # --- DuckDB oracle twins ---------------------------------------------------
@@ -256,26 +394,13 @@ def all_pairs_cosine_micro(
         blks = pdf["blk"].to_numpy()
         M = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["v"]])
         norms = (M * M).sum(axis=1)
-        if i == j:
-            dots = M @ M.T  # exact int64
-            cos = dots.astype(np.float64) / np.sqrt(
-                norms[:, None].astype(np.float64) * norms[None, :].astype(np.float64)
-            )
-            micro = np.floor(cos * 1000000.0 + 0.5).astype(np.int64)
-            keep = (micro >= threshold_micro) & (ids[:, None] < ids[None, :])
-            ai, bi = np.nonzero(keep)
-            return _pairs_frame(ids[ai], ids[bi], micro[ai, bi])
-        mi, mj = blks == i, blks == j
-        A, a_ids, a_n = M[mi], ids[mi], norms[mi]
-        C, c_ids, c_n = M[mj], ids[mj], norms[mj]
-        if len(a_ids) == 0 or len(c_ids) == 0:
-            return _pairs_frame([], [], [])
-        dots = A @ C.T
-        cos = dots.astype(np.float64) / np.sqrt(
-            (a_n[:, None] * c_n[None, :]).astype(np.float64)
-        )
-        micro = np.floor(cos * 1000000.0 + 0.5).astype(np.int64)
-        ai, ci = np.nonzero(micro >= threshold_micro)
+        mi, mj = blks == i, blks == j  # both select every row when i == j
+        a_ids, c_ids = ids[mi], ids[mj]
+        micro = _cos_micro(M[mi], norms[mi], M[mj], norms[mj])
+        keep = micro >= threshold_micro
+        if i == j:  # a block against itself: each unordered pair once
+            keep &= a_ids[:, None] < c_ids[None, :]
+        ai, ci = np.nonzero(keep)
         # cosine is symmetric: relabel so id_a < id_b (exact)
         return _pairs_frame(
             np.minimum(a_ids[ai], c_ids[ci]),
@@ -383,7 +508,7 @@ def split_hot_buckets(
         seed_rel = F.broadcast(seeds) if n_seeds <= seed_broadcast_rows else seeds
         cand = assigned.join(seed_rel, ["centroid", "sub"]).withColumn(
             "_sdist",
-            F.col("norm2") + F.col("_sn") - 2 * int_dot_arrow(F.col("v"), F.col("_sv")),
+            F.col("norm2") + F.col("_sn") - 2 * int_dot(F.col("v"), F.col("_sv")),
         )
         # keyed by (id, centroid), not id alone: under multi-probe
         # assignment a vector has one membership row PER probed bucket,
@@ -451,12 +576,8 @@ def bucketed_cosine_pairs(
         frames = []
         blk = 1024  # row-blocked: peak memory = blk x bucket, not bucket^2
         for s in range(0, len(ids), blk):
-            A, a_ids, a_n = M[s : s + blk], ids[s : s + blk], norms[s : s + blk]
-            dots = A @ M.T  # exact int64
-            cos = dots.astype(np.float64) / np.sqrt(
-                a_n[:, None].astype(np.float64) * norms[None, :].astype(np.float64)
-            )
-            micro = np.floor(cos * 1000000.0 + 0.5).astype(np.int64)
+            a_ids = ids[s : s + blk]
+            micro = _cos_micro(M[s : s + blk], norms[s : s + blk], M, norms)
             keep = (micro >= threshold_micro) & (a_ids[:, None] < ids[None, :])
             ai, bi = np.nonzero(keep)
             frames.append(_pairs_frame(a_ids[ai], ids[bi], micro[ai, bi]))
@@ -477,15 +598,6 @@ def bucketed_cosine_pairs(
 
 
 # --- IVF (inverted-file) variant --------------------------------------------
-
-
-def _with_cn(centroids: DataFrame) -> DataFrame:
-    """(cidx, cv) -> (cidx, cv, cn) with cn = exact-int |cv|^2."""
-    return centroids.select(
-        F.col("cidx").cast("int").alias("cidx"),
-        "cv",
-        int_dot(F.col("cv"), F.col("cv")).alias("cn"),
-    )
 
 
 def ivf_assign(
@@ -511,42 +623,10 @@ def ivf_assign(
     DuckDB oracle. The centroid side is tiny and broadcast; assignment is
     one narrow pass — the partitioning structure of an IVF index at any
     scale. Returns (id, v quantized, norm2, centroid int, dist bigint)."""
-    qz = emb.select(
-        F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v")
-    ).withColumn("norm2", int_dot(F.col("v"), F.col("v")))
-    if centroids is not None:
-        cents = _with_cn(centroids)
-    else:
-        cents = (
-            qz.filter(F.col("id") < k)
-            .select(
-                F.col("id").cast("int").alias("cidx"),
-                F.col("v").alias("cv"),
-                F.col("norm2").alias("cn"),
-            )
-        )
-    joined = qz.join(F.broadcast(cents)).withColumn(
-        "dist", F.col("norm2") + F.col("cn") - 2 * int_dot(F.col("v"), F.col("cv"))
-    )
-    if nprobe == 1:
-        # min_by over a (dist, cidx) struct = the same argmin + tie-break as
-        # the row_number window, but as a map-side-combinable hash aggregate:
-        # the shuffle moves n rows instead of the n*k joined relation, and
-        # no per-key sort runs
-        m = F.min_by(
-            F.struct("v", "norm2", F.col("cidx").alias("centroid"), "dist"),
-            F.struct("dist", "cidx"),
-        )
-        return (
-            joined.groupBy("id")
-            .agg(m.alias("_m"))
-            .select("id", "_m.v", "_m.norm2", "_m.centroid", "_m.dist")
-        )
-    w = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cidx"))
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select("id", "v", "norm2", F.col("cidx").alias("centroid"), "dist")
+    qz = _quantized(emb, id_col, vec_col)
+    cents = _with_cn(centroids) if centroids is not None else _seed_codebook(qz, k)
+    return _nearest(
+        qz, cents, nprobe, ["v", "norm2", F.col("cidx").alias("centroid"), "dist"]
     )
 
 
@@ -563,44 +643,29 @@ def ivf_topk(
     brute-force cosine inside them (query side broadcast). ``centroids``
     plugs in a trained quantizer (see :func:`ivf_assign`)."""
     assigned = ivf_assign(emb, id_col, vec_col, centroids=centroids)
-    # per query: the nprobe nearest centroids (distances to all centroids
-    # computed for the query rows only)
-    qz = emb.select(
-        F.col(id_col).alias("query_id"), quantize(F.col(vec_col)).alias("qv")
-    ).join(queries.select(F.col(id_col).alias("query_id")), "query_id", "left_semi")
-    qz = qz.withColumn("qn", int_dot(F.col("qv"), F.col("qv")))
-    if centroids is not None:
-        cents = _with_cn(centroids)
+    qz = _quantized(emb, id_col, vec_col, _Q).join(
+        queries.select(F.col(id_col).alias("query_id")), "query_id", "left_semi"
+    )
+    if centroids is None:
+        cents = _seed_codebook(_quantized(emb, id_col, vec_col), IVF_K)
     else:
-        cents = (
-            emb.select(F.col(id_col).alias("cid"), quantize(F.col(vec_col)).alias("cv"))
-            .filter(F.col("cid") < IVF_K)
-            .withColumn("cn", int_dot(F.col("cv"), F.col("cv")))
-            .select(F.col("cid").cast("int").alias("cidx"), "cv", "cn")
-        )
-    probes = _ivf_probes(qz, cents, nprobe)
-    return _ivf_bucket_score(assigned, probes, k)
+        cents = _with_cn(centroids)
+    return _ivf_search(qz, cents, assigned, nprobe, k)
 
 
-def _ivf_probes(qz: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """Per query: the nprobe nearest centroids (distances to ALL centroids
-    computed for the query rows only — the centroid side is tiny and
-    broadcast). ``qz`` = (query_id, qv, qn); ``cents`` = (cidx, cv, cn)."""
-    qc = qz.join(F.broadcast(cents)).withColumn(
-        "dist", F.col("qn") + F.col("cn") - 2 * int_dot(F.col("qv"), F.col("cv"))
+def _ivf_search(
+    qz: DataFrame, cents: DataFrame, assigned: DataFrame, nprobe: int, k: int
+) -> DataFrame:
+    """Per query (``qz`` = (query_id, qv, qn)), probe the nprobe nearest
+    centroids of ``cents`` (cidx, cv, cn) — distances to ALL centroids computed
+    for the query rows only — then brute-force cosine inside the probed
+    buckets: candidates join on the centroid id only (non-probed buckets are
+    never touched) and score from the STORED quantized vectors.
+    ``assigned`` = (id, v, norm2, centroid)."""
+    probes = _nearest(
+        qz, cents, nprobe, ["qv", "qn", F.col("cidx").alias("centroid")],
+        row_id="query_id", v="qv", norm="qn",
     )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cidx"))
-    return (
-        qc.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "qn", F.col("cidx").alias("centroid"))
-    )
-
-
-def _ivf_bucket_score(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """Brute-force cosine inside the probed buckets: candidates join on the
-    centroid id only (non-probed buckets are never touched), score from the
-    STORED quantized vectors. ``assigned`` = (id, v, norm2, centroid)."""
     cands = probes.join(
         assigned.select(
             F.col("id").alias("neighbor_id"),
@@ -616,8 +681,7 @@ def _ivf_bucket_score(assigned: DataFrame, probes: DataFrame, k: int) -> DataFra
     scored = cands.withColumn(
         "cosine_micro", F.floor(cos * 1000000.0 + 0.5).cast("bigint")
     ).select("query_id", "neighbor_id", "cosine_micro")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_micro"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, "cosine_micro", k)
 
 
 ANN_CENTROIDS_TABLE = "ann_centroids"
@@ -633,7 +697,6 @@ def ann_index_train(
     vec_col: str = "embedding",
     k: int = IVF_K,
     iters: int = 2,
-    train_fraction: float | None = None,
 ) -> int:
     """Persisted ANN index, train side (VERDICT r5 item 2): run the integer
     Lloyd steps ONCE and commit the trained coarse quantizer (cidx, cv) as
@@ -641,10 +704,7 @@ def ann_index_train(
     10^12 rows training is the expensive pass; everything after reads the
     frozen centroids as a ``snap=`` FileScan and never re-aggregates.
     Returns the committed snapshot id."""
-    cents = kmeans_int(
-        emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        train_fraction=train_fraction,
-    )
+    cents = kmeans_int(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     return store.append(cents, ANN_CENTROIDS_TABLE)
 
 
@@ -702,12 +762,8 @@ def ann_frozen_topk(
     postings = store.read(spark, ANN_POSTINGS_TABLE)
     if cents_raw is None or postings is None:
         raise ValueError("persisted ANN index incomplete: train + assign first")
-    qz = queries.select(
-        F.col(id_col).alias("query_id"), quantize(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", int_dot(F.col("qv"), F.col("qv")))
-    probes = _ivf_probes(qz, _with_cn(cents_raw), nprobe)
-    return _ivf_bucket_score(postings, probes, k)
-
+    qz = _quantized(queries, id_col, vec_col, _Q)
+    return _ivf_search(qz, _with_cn(cents_raw), postings, nprobe, k)
 
 
 _IVF_DIST_SQL = (
@@ -855,28 +911,20 @@ PQ_K = 8  # codewords per subspace
 
 
 def _pq_subs(qz: DataFrame, S: int) -> DataFrame:
-    """(id, s, sub): quantized vectors split into S equal sub-blocks."""
+    """(id, s, v, norm2): quantized vectors (id, v) split into S equal
+    sub-blocks, each with its exact-int |v|^2."""
     width = (F.size(F.col("v")) / S).cast("int")
     sub_structs = F.transform(
         F.sequence(F.lit(0), F.lit(S - 1)),
         lambda s: F.struct(
             s.cast("int").alias("s"),
-            F.slice(F.col("v"), s * width + 1, width).alias("sub"),
+            F.slice(F.col("v"), s * width + 1, width).alias("v"),
         ),
     )
-    return qz.select("id", F.explode(sub_structs).alias("x")).select(
-        "id", F.col("x.s").alias("s"), F.col("x.sub").alias("sub")
-    )
-
-
-def _pq_cents(subs: DataFrame, k: int) -> DataFrame:
-    """Per-subspace codebook: the first k vectors' sub-blocks (seed
-    codewords — deterministic and oracle-reproducible, like ivf_assign;
-    kmeans_int per subspace slots into the same shape)."""
     return (
-        subs.filter(F.col("id") < k)
-        .select(F.col("id").cast("int").alias("cidx"), "s", F.col("sub").alias("csub"))
-        .withColumn("cn", int_dot(F.col("csub"), F.col("csub")))
+        qz.select("id", F.explode(sub_structs).alias("x"))
+        .select("id", F.col("x.s").alias("s"), F.col("x.v").alias("v"))
+        .withColumn("norm2", int_dot(F.col("v"), F.col("v")))
     )
 
 
@@ -884,64 +932,11 @@ def pq_train_codebooks(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     S: int = PQ_S, k: int = PQ_K, iters: int = 2,
 ) -> DataFrame:
-    """TRAINED per-subspace PQ codebooks: integer Lloyd steps run grouped by
-    subspace (the PQ analog of :func:`kmeans_int`, and deliberately the same
-    deterministic recipe — init = first k vectors' sub-blocks, exact-int
-    squared-L2 assignment with ties to the lower codeword, update =
-    per-dimension floor(int_sum/count), empty codewords keep their previous
-    value — so the oracle can unroll the identical steps in SQL). Each
-    iteration: one broadcast assign + one posexplode aggregation; the
-    codebook relation is S*k rows, always broadcastable.
-    Returns (s int, cidx int, csub array<bigint>)."""
-    qz = emb.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v"))
-    subs = _pq_subs(qz, S).withColumn("norm2", int_dot(F.col("sub"), F.col("sub")))
-    subs = subs.localCheckpoint(eager=True)
-    cents = (
-        subs.filter(F.col("id") < k)
-        .select("s", F.col("id").cast("int").alias("cidx"), F.col("sub").alias("csub"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        cn = cents.withColumn("cn", int_dot(F.col("csub"), F.col("csub")))
-        joined = subs.join(F.broadcast(cn), "s").withColumn(
-            "dist",
-            F.col("norm2") + F.col("cn") - 2 * int_dot(F.col("sub"), F.col("csub")),
-        )
-        # per-(id, subspace) argmin via min_by (see ivf_assign for why)
-        assigned = (
-            joined.groupBy("id", "s")
-            .agg(
-                F.min_by(
-                    F.struct("sub", F.col("cidx").alias("centroid")),
-                    F.struct("dist", "cidx"),
-                ).alias("_m")
-            )
-            .select("s", "_m.sub", "_m.centroid")
-        )
-        dims = assigned.select("s", "centroid", F.posexplode(F.col("sub")).alias("pos", "x"))
-        sums = dims.groupBy("s", "centroid", "pos").agg(
-            F.sum("x").alias("sm"), F.count(F.lit(1)).alias("n")
-        )
-        new_cents = (
-            sums.withColumn(
-                "cval", F.floor(F.col("sm").cast("double") / F.col("n")).cast("bigint")
-            )
-            .groupBy("s", "centroid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("cval")))),
-                    lambda e: e.getField("cval"),
-                ).alias("csub")
-            )
-            .select("s", F.col("centroid").alias("cidx"), "csub")
-        )
-        cents = (
-            cents.select("s", "cidx", F.col("csub").alias("csub_old"))
-            .join(new_cents, ["s", "cidx"], "left")
-            .select("s", "cidx", F.coalesce("csub", "csub_old").alias("csub"))
-            .localCheckpoint(eager=True)
-        )
-    return cents
+    """TRAINED per-subspace PQ codebooks: :func:`kmeans_int`'s integer Lloyd
+    steps (:func:`_lloyd`) grouped by subspace, so the oracle unrolls the
+    identical recipe in SQL. The codebook relation is S*k rows, always
+    broadcastable. Returns (s int, cidx int, cv array<bigint>)."""
+    return _lloyd(_pq_subs(_quantized(emb, id_col, vec_col), S), k, iters, keys=("s",))
 
 
 def pq_encode(
@@ -951,27 +946,16 @@ def pq_encode(
     """Product-quantization codes — the memory-compression layer of a
     production ANN index: each vector stores S small codeword ids instead
     of its floats (here 4 bytes vs 256). Assignment = per-subspace exact-int
-    L2 argmin (ties to the lower codeword), one broadcast join + window.
-    ``cents`` overrides the seed codebook (pass :func:`pq_train_codebooks`
-    output for the trained variant). Returns (id, codes array<int>[S])."""
-    qz = emb.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v"))
-    subs = _pq_subs(qz, S)
-    cents = _pq_cents(subs, k) if cents is None else cents.withColumn(
-        "cn", int_dot(F.col("csub"), F.col("csub"))
-    )
-    joined = subs.join(F.broadcast(cents), "s").withColumn(
-        "dist",
-        int_dot(F.col("sub"), F.col("sub"))
-        + F.col("cn")
-        - 2 * int_dot(F.col("sub"), F.col("csub")),
-    )
-    # per-(id, subspace) argmin via min_by (see ivf_assign for why)
-    assigned = joined.groupBy("id", "s").agg(
-        F.min_by("cidx", F.struct("dist", "cidx")).alias("cidx")
-    )
-    return assigned.groupBy("id").agg(
+    L2 argmin (ties to the lower codeword), one broadcast join + hash
+    aggregate. ``cents`` (s, cidx, cv) overrides the seed codebook (pass
+    :func:`pq_train_codebooks` output for the trained variant). Returns
+    (id, codes array<int>[S])."""
+    subs = _pq_subs(_quantized(emb, id_col, vec_col), S)
+    cents = _seed_codebook(subs, k, ("s",)) if cents is None else _with_cn(cents)
+    codes = _nearest(subs, cents, 1, [F.col("cidx").alias("code")], ("s",))
+    return codes.groupBy("id").agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("s", F.col("cidx").alias("code")))),
+            F.array_sort(F.collect_list(F.struct("s", "code"))),
             lambda e: e.getField("code"),
         ).alias("codes")
     )
@@ -987,35 +971,17 @@ def pq_adc_topk(
     k: int = PQ_K,
     cents: DataFrame | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query builds an
-    S x k lookup table of exact-int sub-dot-products against the codebook;
-    a document's approximate dot product is the sum of S table lookups of
-    its codes — the corpus floats are never touched at query time. ``cents``
-    overrides the seed codebook (trained variant). Emits
+    """Asymmetric-distance (ADC) top-k over PQ codes (:func:`_adc_topk`).
+    ``cents`` overrides the seed codebook (trained variant). Emits
     (query_id, neighbor_id, approx_dot, rank)."""
-    qz = emb.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v"))
-    subs = _pq_subs(qz, S)
-    cents = _pq_cents(subs, k) if cents is None else cents.withColumn(
-        "cn", int_dot(F.col("csub"), F.col("csub"))
-    )
-    codes = pq_encode(emb, id_col, vec_col, S, k, cents=cents.drop("cn")).select(
+    subs = _pq_subs(_quantized(emb, id_col, vec_col), S)
+    codes = pq_encode(emb, id_col, vec_col, S, k, cents=cents).select(
         "id", F.posexplode(F.col("codes")).alias("s", "code")
     )
-    q_subs = subs.join(
-        queries.select(F.col(id_col).alias("id")), "id", "left_semi"
-    ).withColumnRenamed("id", "query_id")
-    lut = q_subs.join(F.broadcast(cents), "s").select(
-        "query_id", "s", F.col("cidx").alias("code"),
-        int_dot(F.col("sub"), F.col("csub")).alias("part"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("part").cast("bigint").alias("approx_dot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= topk)
+    if cents is None:
+        cents = _seed_codebook(subs, k, ("s",))
+    qsubs = subs.join(queries.select(F.col(id_col).alias("id")), "id", "left_semi")
+    return _adc_topk(codes, qsubs, cents, topk)
 
 
 def posting_cosine_pairs(
@@ -1079,7 +1045,7 @@ def ann_pq_train(
     iters: int = 2,
 ) -> int:
     """PQ side of the persisted index: train the per-subspace codebooks
-    once (:func:`pq_train_codebooks`) and commit (s, cidx, csub) as a
+    once (:func:`pq_train_codebooks`) and commit (s, cidx, cv) as a
     snapshot. Returns the committed snapshot id."""
     return store.append(
         pq_train_codebooks(emb, id_col, vec_col, S=S, k=k, iters=iters),
@@ -1128,22 +1094,9 @@ def ann_pq_frozen_topk(
     codes_rows = store.read(spark, ANN_CODES_TABLE)
     if cents_raw is None or codes_rows is None:
         raise ValueError("persisted PQ index incomplete: train + encode first")
-    cents = cents_raw.withColumn("cn", int_dot(F.col("csub"), F.col("csub")))
     codes = codes_rows.select("id", F.posexplode(F.col("codes")).alias("s", "code"))
-    qz = queries.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v"))
-    q_subs = _pq_subs(qz, S).withColumnRenamed("id", "query_id")
-    lut = q_subs.join(F.broadcast(cents), "s").select(
-        "query_id", "s", F.col("cidx").alias("code"),
-        int_dot(F.col("sub"), F.col("csub")).alias("part"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("part").cast("bigint").alias("approx_dot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= topk)
+    qsubs = _pq_subs(_quantized(queries, id_col, vec_col), S)
+    return _adc_topk(codes, qsubs, cents_raw, topk)
 
 
 def pq_adc_topk_sql(
@@ -1320,58 +1273,27 @@ def ivfpq_topk(
     the full corpus nor its float vectors are touched at query time.
     All exact-int arithmetic; emits (query_id, neighbor_id, approx_dot,
     rank)."""
+    qz = _quantized(emb, id_col, vec_col)
     assigned = ivf_assign(emb, id_col, vec_col, kc).select("id", "centroid")
     codes = (
         pq_encode(emb, id_col, vec_col, S, k)
         .select("id", F.posexplode(F.col("codes")).alias("s", "code"))
         .join(assigned, "id")
     )
-    # query probes: nprobe nearest coarse buckets (same shape as ivf_topk)
-    qz = emb.select(
-        F.col(id_col).alias("query_id"), quantize(F.col(vec_col)).alias("qv")
-    ).join(queries.select(F.col(id_col).alias("query_id")), "query_id", "left_semi")
-    qz = qz.withColumn("qn", int_dot(F.col("qv"), F.col("qv")))
-    ccents = (
-        emb.select(F.col(id_col).alias("cid"), quantize(F.col(vec_col)).alias("cv"))
-        .filter(F.col("cid") < kc)
-        .withColumn("cn", int_dot(F.col("cv"), F.col("cv")))
-        .select(F.col("cid").cast("int").alias("cidx"), "cv", "cn")
+    # query probes: nprobe nearest coarse buckets (same op as ivf_topk)
+    q = _quantized(emb, id_col, vec_col, _Q).join(
+        queries.select(F.col(id_col).alias("query_id")), "query_id", "left_semi"
     )
-    qc = qz.join(F.broadcast(ccents)).withColumn(
-        "dist", F.col("qn") + F.col("cn") - 2 * int_dot(F.col("qv"), F.col("cv"))
+    probes = _nearest(
+        q, _seed_codebook(qz, kc), nprobe, [F.col("cidx").alias("centroid")],
+        row_id="query_id", v="qv", norm="qn",
     )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cidx"))
-    probes = (
-        qc.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", F.col("cidx").alias("centroid"))
+    subs = _pq_subs(qz, S)
+    qsubs = subs.join(queries.select(F.col(id_col).alias("id")), "id", "left_semi")
+    cands = codes.join(F.broadcast(probes), "centroid")
+    return _adc_topk(
+        cands, qsubs, _seed_codebook(subs, k, ("s",)), topk, on=("query_id", "s", "code")
     )
-    # per-query LUT of sub-dot-products against the PQ codebook
-    qsubs = _pq_subs(
-        emb.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v")), S
-    ).join(queries.select(F.col(id_col).alias("id")), "id", "left_semi")
-    pcents = _pq_cents(
-        _pq_subs(
-            emb.select(F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v")), S
-        ),
-        k,
-    )
-    lut = qsubs.withColumnRenamed("id", "query_id").join(
-        F.broadcast(pcents), "s"
-    ).select(
-        "query_id", "s", F.col("cidx").alias("code"),
-        int_dot(F.col("sub"), F.col("csub")).alias("part"),
-    )
-    cands = codes.join(F.broadcast(probes), "centroid").filter(
-        F.col("id") != F.col("query_id")
-    )
-    scored = (
-        cands.join(F.broadcast(lut), ["query_id", "s", "code"])
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("part").cast("bigint").alias("approx_dot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= topk)
 
 
 def ivfpq_topk_sql(
@@ -1663,85 +1585,8 @@ def kmeans_int(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_fraction: float | None = None,
-    seed: int = 7,
 ) -> DataFrame:
-    """Trained IVF coarse quantizer: integer k-means over quantized vectors.
-
-    Fully deterministic and engine-portable by construction: init = first k
-    vectors by id; assignment = exact-int squared L2 (ties to the lower
-    centroid index); update = per-dimension floor(int_sum / count) (floor of
-    an exact int ratio in doubles — both sums and counts are far below
-    2^53). Empty clusters keep their previous centroid. Each iteration is
-    one broadcast-assign pass + one posexplode aggregation — no driver-side
-    math; centroid arrays are rebuilt with a deterministic sort.
-    Returns (cidx int, cv array<bigint>) after ``iters`` Lloyd steps.
-
-    ``train_fraction`` subsamples the TRAINING set (standard practice at
-    10^12 rows: Lloyd steps on a seed-deterministic sample, assignment of
-    the full corpus stays exact). Leave None when the quantizer must be
-    reproducible by an engine-independent oracle — Spark's sampler is not
-    portable.
-    """
-    qz = emb.select(
-        F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("v")
-    ).withColumn("norm2", int_dot(F.col("v"), F.col("v")))
-    if train_fraction is not None:
-        # seeds (first k by id) always stay in: init must not depend on the
-        # sample, or the oracle-visible k would drift
-        qz = qz.filter(F.col("id") < k).unionByName(
-            qz.filter(F.col("id") >= k).sample(fraction=train_fraction, seed=seed)
-        )
-    qz = qz.localCheckpoint(eager=True)
-    cents = (
-        qz.filter(F.col("id") < k)
-        .select(F.col("id").cast("int").alias("cidx"), F.col("v").alias("cv"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        cn = cents.withColumn("cn", int_dot(F.col("cv"), F.col("cv")))
-        joined = qz.join(F.broadcast(cn)).withColumn(
-            "dist", F.col("norm2") + F.col("cn") - 2 * int_dot(F.col("v"), F.col("cv"))
-        )
-        # argmin via min_by hash aggregate (same tie-break as a row_number
-        # window; map-side combine, no n*k shuffle, no per-key sort)
-        assigned = (
-            joined.groupBy("id")
-            .agg(
-                F.min_by(
-                    F.struct("v", F.col("cidx").alias("centroid")),
-                    F.struct("dist", "cidx"),
-                ).alias("_m")
-            )
-            .select("id", "_m.v", "_m.centroid")
-        )
-        dims = assigned.select(
-            "centroid", F.posexplode(F.col("v")).alias("pos", "x")
-        )
-        sums = dims.groupBy("centroid", "pos").agg(
-            F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        new_cents = (
-            sums.withColumn(
-                "cval",
-                F.floor(F.col("s").cast("double") / F.col("n")).cast("bigint"),
-            )
-            .groupBy("centroid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("cval")))
-                    ),
-                    lambda e: e.getField("cval"),
-                ).alias("cv")
-            )
-            .select(F.col("centroid").alias("cidx"), "cv")
-        )
-        # empty clusters keep their previous centroid
-        cents = (
-            cents.select("cidx", F.col("cv").alias("cv_old"))
-            .join(new_cents, "cidx", "left")
-            .select("cidx", F.coalesce("cv", "cv_old").alias("cv"))
-            .localCheckpoint(eager=True)
-        )
-    return cents
+    """Trained IVF coarse quantizer: ``iters`` integer Lloyd steps
+    (:func:`_lloyd`) over the quantized vectors, init = first k vectors by
+    id. Returns (cidx int, cv array<bigint>)."""
+    return _lloyd(_quantized(emb, id_col, vec_col), k, iters)

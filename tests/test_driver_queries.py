@@ -3,6 +3,8 @@ and every oracle-gated query is compared against DuckDB (row count + sorted
 value hash) — the same check the driver performs at sf0.01.
 """
 
+import hashlib
+import json
 import os
 import sys
 
@@ -46,6 +48,14 @@ def test_oracle_gated_query(spark, duck, name):
     assert len(a) == len(b), f"{name}: {len(a)} vs {len(b)} rows"
     assert list(a.columns) == list(b.columns), f"{name}: column mismatch"
     assert value_hash(a) == value_hash(b), f"{name}: value hash mismatch"
+
+
+def test_oracle_sql_frozen():
+    # every query is gated against these texts, so a change to any of them
+    # must be deliberate: update the digest in the same change that edits
+    # an oracle builder, and say why
+    digest = hashlib.sha256(json.dumps(ORACLES, sort_keys=True).encode()).hexdigest()
+    assert digest == "65b231d4e932a3b97e27a4fe41b48d44027ee0bfadc31f5191c9554c8233c725"
 
 
 def test_every_query_is_oracle_gated():

@@ -288,6 +288,8 @@ def test_split_seed_debroadcast_plan(spark):
 
     for p in (p_dflt, p_forced):
         assert "CartesianProduct" not in p
+        # the sub-seed distances use the Catalyst dot: no Python boundary
+        assert "EvalPython" not in p
     # small seeds: the candidate join is broadcast (more BroadcastExchange
     # nodes than the forced-shuffle plan, which must fall back to a
     # shuffle join for the same relation)
@@ -423,8 +425,9 @@ def test_regex_queries_call_the_kernel_once(spark, tmp_path, query):
 
 def test_ann_index_paths_are_python_free(spark, tmp_path):
     """The ANN increment, frozen search, IVF+PQ and embedding-dedup plans
-    assign with the Catalyst dot: no Python boundary (the dedup plan's
-    per-bucket numpy kernel is a grouped map, not an EvalPython)."""
+    (with and without the hot-bucket split) assign with the Catalyst dot:
+    no Python boundary (the dedup plan's per-bucket numpy kernel is a
+    grouped map, not an EvalPython)."""
     from go_log_forwarder_spark.functions import similarity as sim
     from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
 
@@ -449,5 +452,6 @@ def test_ann_index_paths_are_python_free(spark, tmp_path):
     assert "EvalPython" not in plan_of(
         sim.ivfpq_topk(emb, queries, topk=3, nprobe=2, kc=2, S=3, k=2)
     )
-    dedup = plan_of(sim.bucketed_cosine_pairs(emb, 900000, k=4))
-    assert "FlatMapGroupsInPandas" in dedup and "EvalPython" not in dedup
+    for split_cap in (None, 8):
+        dedup = plan_of(sim.bucketed_cosine_pairs(emb, 900000, k=4, split_cap=split_cap))
+        assert "FlatMapGroupsInPandas" in dedup and "EvalPython" not in dedup

@@ -973,6 +973,55 @@ def test_kmeans_int_golden(spark):
     assert got == cents
 
 
+def test_pq_train_codebooks_golden(spark):
+    """2 per-subspace Lloyd steps (S=2) == pure-Python reimplementation.
+    Vectors 0 and 1 share their subspace-0 block, so codeword 1 of
+    subspace 0 ties codeword 0 on every row, loses every tie and must keep
+    its seed value."""
+    rows = [
+        (0, [0.1, 0.2, 0.5, -0.5]),
+        (1, [0.1, 0.2, -0.3, 0.4]),
+        (2, [-0.4, 0.3, 0.2, 0.2]),
+        (3, [0.15, 0.25, 0.45, -0.4]),
+        (4, [-0.35, 0.35, -0.25, 0.5]),
+        (5, [0.9, -0.8, 0.1, 0.0]),
+        (6, [-0.5, 0.2, 0.3, 0.1]),
+        (7, [0.05, 0.1, -0.2, 0.3]),
+    ]
+    S, k = 2, 3
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {
+        (r["s"], r["cidx"]): list(r["cv"])
+        for r in sim.pq_train_codebooks(emb, S=S, k=k, iters=2).collect()
+    }
+
+    def q(v):
+        return [math.floor(float(x) * 10000 + 0.5) for x in v]
+
+    want, empty = {}, set()
+    for s in range(S):
+        subs = {i: q(v)[2 * s : 2 * s + 2] for i, v in rows}
+        cents = {c: subs[c] for c in range(k)}
+        for _ in range(2):
+            groups = {c: [] for c in range(k)}
+            for v in subs.values():
+                dists = [
+                    (sum(x * x for x in v) + sum(x * x for x in cv)
+                     - 2 * sum(a * b for a, b in zip(v, cv)), c)
+                    for c, cv in sorted(cents.items())
+                ]
+                groups[min(dists)[1]].append(v)
+            for c in range(k):
+                if groups[c]:
+                    n = len(groups[c])
+                    cents[c] = [math.floor(sum(col) / n) for col in zip(*groups[c])]
+                else:
+                    empty.add((s, c))
+        want.update({(s, c): cv for c, cv in cents.items()})
+    assert (0, 1) in empty  # the case this golden pins
+    assert got == want
+
+
 def test_dup_clusters_raises_on_iteration_cap(spark):
     # a 5-node chain has diameter 4 -> min-label propagation cannot converge
     # in 1 iteration; silently returning partial labels would diverge from

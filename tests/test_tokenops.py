@@ -179,22 +179,3 @@ def test_fused_regex_canonical_parity(spark):
             assert jvm[1] == '{"level":"ERROR","message":"event \\"quoted\\"\\\\slash"}'
         else:
             assert jvm[1] == jvm[2] == "{}"
-
-
-def test_int_dot_arrow_parity(spark):
-    # r7: vectorized dot must match the Catalyst zip_with+aggregate fold
-    # bit-for-bit, including negative values and int64 wrap-free products
-    from go_log_forwarder_spark.functions import similarity as sim
-
-    rows = [
-        ([1, -2, 3], [4, 5, -6]),
-        ([0, 0, 0], [1, 2, 3]),
-        ([100000, -100000, 7], [100000, 100000, -7]),
-    ]
-    df = spark.createDataFrame(rows, "a array<bigint>, b array<bigint>")
-    got = df.select(
-        sim.int_dot(F.col("a"), F.col("b")).alias("jvm"),
-        sim.int_dot_arrow(F.col("a"), F.col("b")).alias("arrow"),
-    ).collect()
-    for r in got:
-        assert r["jvm"] == r["arrow"]
