@@ -28,7 +28,6 @@ from go_log_forwarder_spark.operators.aggregate import (
     per_sink_counts,
     per_sink_source_counts,
     pipeline_metrics,
-    pipeline_metrics_single_scan,
 )
 from go_log_forwarder_spark.functions import dedup as dd
 from go_log_forwarder_spark.functions import multimodal as mm
@@ -182,7 +181,7 @@ def q_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     three-frame formulation re-parsed the pipeline once per metric
     family (guide §2.4: don't pay the same pass three times)."""
     parsed = _parsed(spark, sf_dir)
-    return pipeline_metrics_single_scan(parsed, GREP.keep_pred(), SINKS)
+    return pipeline_metrics(parsed, GREP.keep_pred(), SINKS)
 
 
 def q_routed_rows_err_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,8 +1653,7 @@ def q_resume_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(6).write.mode("overwrite").parquet(inp)
 
     def pf(df):
-        parsed = ParserChain([JsonParser()]).apply(df)
-        return parsed, GREP.apply(parsed)
+        return ParserChain([JsonParser()]).apply(df), GREP.keep_pred()
 
     rp = ResumablePipeline(f"{tmp}/wd", SINKS)
     try:

@@ -4,8 +4,10 @@ The reference's ONLY aggregate is the counter output
 (``internal/output/counter/counter.go:39-62``): a per-sink running count of
 tag-matched events. The implicit second aggregate is the per-input line
 accounting (tail.go:449, http.go:134-149). The north rule widens these to
-per-sink / per-source counts and per-partition pipeline metrics
-(rows_in / rows_parsed / rows_dropped / rows_routed).
+per-sink / per-source counts and run accounting (rows_in / rows_parsed /
+rows_dropped / rows_routed). :func:`pipeline_metrics` is the one copy of
+that accounting: the roster keys it by source, the per-partition view by
+``spark_partition_id()``, and ``plans/lineage.py`` by input unit.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.routing import SinkSpec, route_exploded
+from ..operators.routing import SinkSpec
 
 
 def _sink_count_cols(sinks: list[SinkSpec], tag_col: str) -> list:
@@ -63,38 +65,25 @@ def per_sink_source_counts(
     )
 
 
-def per_partition_metrics(parsed_df: DataFrame, run_id: str = "run") -> DataFrame:
-    """A2 (north rule): per-PHYSICAL-partition accounting — rows_in /
-    rows_parsed per spark_partition_id, the executor-granular twin of the
-    per-unit lineage metrics (plans/lineage.py). One map-side pass +
-    one tiny shuffle over (partition_id) rows."""
-    return (
-        parsed_df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.when(F.col("parsed").isNotNull(), 1).otherwise(0)).alias("rows_parsed"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-    )
-
-
-def pipeline_metrics_single_scan(
+def pipeline_metrics(
     parsed_df: DataFrame,
     keep_pred,
     sinks: list[SinkSpec],
     key_col: str = "source",
     tag_col: str = "tag",
 ) -> DataFrame:
-    """One-scan twin of :func:`pipeline_metrics` for the common case
-    ``kept_df == parsed_df.filter(keep_pred)`` (round-7 optimization):
-    the three-frame formulation aggregates parsed/kept/routed separately,
-    which re-evaluates the whole parse pipeline three times (three scans
-    at the sf1.0 bench). Conditional aggregation computes all four
-    metrics in ONE pass: rows_routed is the sum over kept rows of their
-    matching-sink count — a row matching no sink contributes 0, exactly
-    as ``route_exploded`` dropping it; rows_dropped = rows_in - kept.
-    Output is identical column-for-column (pinned by the unchanged
-    oracle)."""
+    """Per-``key_col`` accounting in ONE scan: rows_in, rows_parsed,
+    rows_dropped (by the filter chain), rows_routed (row x sink pairs;
+    fan-out duplicates rows across sinks by design, engine.go:137-143).
+
+    ``parsed_df`` is the post-parse pre-filter frame and ``keep_pred`` the
+    filter chain's survival predicate over it (``GrepFilter.keep_pred``).
+    Conditional aggregation: rows_routed is the sum over kept rows of
+    their matching-sink count — a row matching no sink contributes 0, as
+    ``route_exploded`` dropping it; rows_dropped = rows_in - kept. Mirrors
+    the accounting in tail.go:449/http.go:149. The per-partition view keys
+    on ``F.spark_partition_id()``, the resumable runner on its unit column.
+    """
     key = F.col(key_col)
     n_match = None
     for s in sinks:
@@ -111,42 +100,4 @@ def pipeline_metrics_single_scan(
         "rows_parsed",
         (F.col("rows_in") - F.col("_kept")).alias("rows_dropped"),
         "rows_routed",
-    )
-
-
-def pipeline_metrics(
-    parsed_df: DataFrame,
-    kept_df: DataFrame,
-    sinks: list[SinkSpec],
-    key_col: str = "source",
-    tag_col: str = "tag",
-) -> DataFrame:
-    """Per-``key_col`` metrics: rows_in, rows_parsed, rows_dropped (by the
-    filter chain), rows_routed (row x sink pairs; fan-out duplicates rows
-    across sinks by design, engine.go:137-143).
-
-    ``parsed_df`` is the post-parse pre-filter frame; ``kept_df`` the
-    post-filter frame. Mirrors the accounting in tail.go:449/http.go:149.
-    """
-    key = F.col(key_col)
-    ins = parsed_df.groupBy(key.alias(key_col)).agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.when(F.col("parsed").isNotNull(), 1).otherwise(0)).alias("rows_parsed"),
-    )
-    kept = kept_df.groupBy(key.alias(key_col)).agg(F.count(F.lit(1)).alias("rows_kept"))
-    routed = (
-        route_exploded(kept_df, sinks, tag_col)
-        .groupBy(F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("rows_routed"))
-    )
-    return (
-        ins.join(kept, key_col, "left")
-        .join(routed, key_col, "left")
-        .select(
-            key_col,
-            "rows_in",
-            "rows_parsed",
-            (F.col("rows_in") - F.coalesce("rows_kept", F.lit(0))).alias("rows_dropped"),
-            F.coalesce("rows_routed", F.lit(0)).alias("rows_routed"),
-        )
     )

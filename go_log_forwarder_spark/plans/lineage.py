@@ -8,14 +8,18 @@ engine is strictly stronger (exactly-once across retries):
 - **Work unit** = input file (the file-scan task granule; at 10^12 rows an
   Iceberg scan-task manifest plays the same role). The unit list comes from
   the filesystem/manifest, never from scanning row data.
-- **Idempotent output**: each run processes ALL uncommitted units in ONE
-  Spark job and writes every sink partitioned by unit with dynamic partition
-  overwrite — a retried unit replaces its own output, never duplicates it.
+- **Idempotent output**: each run processes ALL uncommitted units over ONE
+  persisted parsed frame and writes every sink partitioned by unit with
+  dynamic partition overwrite (a per-write option; the session conf is left
+  as found) — a retried unit replaces its own output, never duplicates it.
 - **Atomic lineage commit**: after the sink writes succeed, one lineage row
   per unit (run_id, unit, rows_in/parsed/dropped/routed, status, ts) is
-  committed via temp+rename JSON — the parquet-manifest analog of an Iceberg
-  snapshot commit. Crash before the commit -> the unit is reprocessed and
-  its output overwritten (no dup, no loss). Crash after -> it is skipped.
+  committed to :class:`LineageStore`, one JSON file per unit via
+  temp+rename — the analog of an Iceberg snapshot commit, with no Spark job
+  per unit. The four counts come from ``operators.aggregate.
+  pipeline_metrics`` keyed by unit, the same core the roster keys by
+  source. Crash before the commit -> the unit is reprocessed and its
+  output overwritten (no dup, no loss). Crash after -> it is skipped.
 - **Resume** = anti-join of the unit list against committed lineage
   (a driver-side set difference over file names — partition pruning happens
   BEFORE any data is read, mirroring the offset seek).
@@ -25,19 +29,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.aggregate import pipeline_metrics
 from ..operators.routing import SinkSpec
-from ..sources.storage import ParquetSnapshotStore
 
 UNIT_COL = "_unit"
 
+_METRICS = ("rows_in", "rows_parsed", "rows_dropped", "rows_routed")
 _METRICS_SCHEMA = (
     "run_id string, unit string, rows_in long, rows_parsed long, "
     "rows_dropped long, rows_routed long, status string"
@@ -78,14 +84,15 @@ class LineageStore:
     def _run_dir(self, run_id: str) -> str:
         return os.path.join(self.base, run_id)
 
-    def committed(self, run_id: str, spark: SparkSession | None = None) -> dict[str, dict]:
+    def committed(self, run_id: str) -> dict[str, dict]:
         d = self._run_dir(run_id)
         if not os.path.isdir(d):
             return {}
         out = {}
         for f in os.listdir(d):
             if f.endswith(".json"):
-                rec = json.load(open(os.path.join(d, f)))
+                with open(os.path.join(d, f)) as fh:
+                    rec = json.load(fh)
                 out[rec["unit"]] = rec
         return out
 
@@ -110,107 +117,41 @@ class LineageStore:
             os.remove(p)
 
     def metrics_df(self, spark: SparkSession, run_id: str) -> DataFrame:
-        recs = list(self.committed(run_id).values())
         rows = [
-            (
-                r["run_id"], r["unit"], r["rows_in"], r["rows_parsed"],
-                r["rows_dropped"], r["rows_routed"], r["status"],
-            )
-            for r in recs
+            (r["run_id"], r["unit"], *(r[m] for m in _METRICS), r["status"])
+            for r in self.committed(run_id).values()
         ]
         return spark.createDataFrame(rows, _METRICS_SCHEMA)
-
-
-class TableLineageStore:
-    """Lineage as an append-only parquet-manifest TABLE (the Iceberg shape;
-    SURVEY §7.0): every commit/invalidation appends one atomic snapshot via
-    :class:`ParquetSnapshotStore`; a unit's state is its LATEST row
-    (invalidations are tombstone rows with status='invalidated'). On a real
-    cluster this is a config-only swap to Iceberg appends — same interface
-    as :class:`LineageStore`."""
-
-    TABLE = "lineage"
-    _SCHEMA = (
-        "run_id string, unit string, rows_in long, rows_parsed long, "
-        "rows_dropped long, rows_routed long, status string, "
-        "committed_at double, unit_size long, unit_mtime_ns long"
-    )
-
-    def __init__(self, spark: SparkSession, base: str):
-        self.spark = spark
-        self.store = ParquetSnapshotStore(base)
-
-    def _latest(self, run_id: str) -> DataFrame | None:
-        df = self.store.read(self.spark, self.TABLE)
-        if df is None:
-            return None
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("unit").orderBy(F.desc("committed_at"))
-        return (
-            df.filter(F.col("run_id") == run_id)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    def committed(self, run_id: str, spark: SparkSession | None = None) -> dict[str, dict]:
-        latest = self._latest(run_id)
-        if latest is None:
-            return {}
-        return {
-            r["unit"]: r.asDict()
-            for r in latest.filter(F.col("status") == "committed").collect()
-        }
-
-    def commit(self, run_id: str, records: list[dict]) -> None:
-        rows = [
-            (
-                rec["run_id"], rec["unit"], rec["rows_in"], rec["rows_parsed"],
-                rec["rows_dropped"], rec["rows_routed"], rec["status"],
-                rec["committed_at"], rec.get("unit_size"), rec.get("unit_mtime_ns"),
-            )
-            for rec in records
-        ]
-        self.store.append(self.spark.createDataFrame(rows, self._SCHEMA), self.TABLE)
-
-    def invalidate(self, run_id: str, unit: str) -> None:
-        self.commit(
-            run_id,
-            [
-                {
-                    "run_id": run_id, "unit": unit, "rows_in": 0, "rows_parsed": 0,
-                    "rows_dropped": 0, "rows_routed": 0, "status": "invalidated",
-                    "committed_at": time.time(), "unit_size": None,
-                    "unit_mtime_ns": None,
-                }
-            ],
-        )
-
-    def metrics_df(self, spark: SparkSession, run_id: str) -> DataFrame:
-        latest = self._latest(run_id)
-        cols = [c.strip().split(" ")[0] for c in _METRICS_SCHEMA.split(",")]
-        if latest is None:
-            return spark.createDataFrame([], _METRICS_SCHEMA)
-        return latest.filter(F.col("status") == "committed").select(*cols)
 
 
 class ResumablePipeline:
     """Exactly-once resumable pipeline runner over file-unit granules.
 
-    ``pipeline_fn(df) -> (parsed_df, kept_df)`` is the parse+filter stage;
-    sinks receive ``kept_df`` rows whose tag matches their pattern.
+    ``pipeline_fn(df) -> (parsed_df, keep_pred)`` is the parse+filter
+    stage; sinks receive ``parsed_df`` rows that satisfy ``keep_pred`` and
+    whose tag matches their pattern.
     """
 
-    def __init__(self, work_dir: str, sinks: list[SinkSpec], lineage=None):
+    def __init__(self, work_dir: str, sinks: list[SinkSpec]):
         self.work_dir = work_dir
         self.sinks = sinks
-        # default: filesystem JSON store; pass a TableLineageStore for the
-        # parquet-manifest (Iceberg-shaped) variant — same interface
-        self.lineage = lineage or LineageStore(os.path.join(work_dir, "_lineage"))
+        self.lineage = LineageStore(os.path.join(work_dir, "_lineage"))
 
     def _sink_dir(self, sink: SinkSpec) -> str:
         return os.path.join(self.work_dir, "sinks", sink.name)
+
+    def _clear_units(self, units: set[str]) -> None:
+        """Remove every sink's output for units about to be rewritten.
+        Dynamic overwrite replaces only the partitions a write produces, so
+        a reprocessed unit that now routes no rows to a sink would keep its
+        old rows there. The units are uncommitted, so a crash after this
+        reprocesses them."""
+        prefix = f"{UNIT_COL}="
+        for s in self.sinks:
+            d = self._sink_dir(s)
+            for name in os.listdir(d) if os.path.isdir(d) else ():
+                if name.startswith(prefix) and unquote(name[len(prefix):]) in units:
+                    shutil.rmtree(os.path.join(d, name))
 
     def list_units(self, spark: SparkSession, input_path: str) -> list[str]:
         df = spark.read.parquet(input_path)
@@ -223,7 +164,7 @@ class ResumablePipeline:
         self,
         spark: SparkSession,
         input_path: str,
-        pipeline_fn: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+        pipeline_fn: Callable[[DataFrame], tuple[DataFrame, Column]],
         run_id: str,
         fail_after_units: int | None = None,
         max_units_per_batch: int | None = None,
@@ -240,7 +181,7 @@ class ResumablePipeline:
         # read past the new EOF (cheap: metadata only)
         spark.catalog.refreshByPath(input_path)
         units = self.list_units(spark, input_path)
-        committed = self.lineage.committed(run_id, spark)
+        committed = self.lineage.committed(run_id)
         # truncation/replacement reset (tail.go:409-415: offset > size ->
         # seek 0), generalized: a committed unit whose file CHANGED since
         # commit — shrunk, grew (append), or was replaced in place (size
@@ -267,66 +208,46 @@ class ResumablePipeline:
         if not todo:
             return {"processed": 0, "skipped": len(done)}
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         df = spark.read.parquet(*todo).withColumn(UNIT_COL, F.input_file_name())
-        parsed, kept = pipeline_fn(df)
+        parsed, keep = pipeline_fn(df)
         parsed = parsed.persist()
-        kept = kept.persist()
         try:
+            self._clear_units(set(todo))
             for s in self.sinks:
-                sdf = kept.filter(s.compiled.column(F.col("tag")))
                 (
-                    sdf.write.mode("overwrite")
+                    parsed.filter(keep & s.compiled.column(F.col("tag")))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy(UNIT_COL)
                     .parquet(self._sink_dir(s))
                 )
-            # per-unit metrics (A2): rows in/parsed/dropped/routed — ONE
-            # aggregation job over the persisted frames (routed counts are
-            # per-sink conditional sums, not a second pass per sink; the
-            # old shape ran 3 collects + one count per sink).
-            in_stats = parsed.groupBy(UNIT_COL).agg(
-                F.count(F.lit(1)).alias("rows_in"),
-                F.sum(F.when(F.col("parsed").isNotNull(), 1).otherwise(0)).alias(
-                    "rows_parsed"
-                ),
-            )
-            routed_expr = None
-            for s in self.sinks:
-                term = F.sum(s.compiled.column(F.col("tag")).cast("long"))
-                routed_expr = term if routed_expr is None else routed_expr + term
-            kept_stats = kept.groupBy(UNIT_COL).agg(
-                F.count(F.lit(1)).alias("rows_kept"),
-                routed_expr.alias("rows_routed"),
-            )
+            # per-unit metrics (A2): the one accounting core, keyed by unit
             stats = {
                 r[UNIT_COL]: r
-                for r in in_stats.join(kept_stats, UNIT_COL, "left").collect()
+                for r in pipeline_metrics(parsed, keep, self.sinks, UNIT_COL).collect()
             }
         finally:
             parsed.unpersist()
-            kept.unpersist()
 
-        records = []
         for i, u in enumerate(todo):
             if fail_after_units is not None and i >= fail_after_units:
                 # simulated crash: sink data written, lineage NOT committed
                 raise RuntimeError(f"injected failure before committing {u}")
             st = stats.get(u)
-            records.append(
-                {
-                    "run_id": run_id,
-                    "unit": u,
-                    "rows_in": st["rows_in"] if st else 0,
-                    "rows_parsed": st["rows_parsed"] if st else 0,
-                    "rows_dropped": (st["rows_in"] - (st["rows_kept"] or 0)) if st else 0,
-                    "rows_routed": (st["rows_routed"] or 0) if st else 0,
-                    "status": "committed",
-                    "committed_at": time.time(),
-                    "unit_size": unit_size(u),
-                    "unit_mtime_ns": unit_mtime_ns(u),
-                }
+            self.lineage.commit(
+                run_id,
+                [
+                    {
+                        "run_id": run_id,
+                        "unit": u,
+                        **{m: st[m] if st else 0 for m in _METRICS},
+                        "status": "committed",
+                        "committed_at": time.time(),
+                        "unit_size": unit_size(u),
+                        "unit_mtime_ns": unit_mtime_ns(u),
+                    }
+                ],
             )
-            self.lineage.commit(run_id, [records[-1]])
         return {"processed": len(todo), "skipped": len(done)}
 
     def read_sink(self, spark: SparkSession, sink_name: str) -> DataFrame:

@@ -18,8 +18,8 @@ ev.select(F.col("props").alias("raw"),
 
 SINKS = [SinkSpec("all", "*"), SinkSpec("err", "evt-err*")]
 def pf(df):
-    parsed = ParserChain([JsonParser()]).apply(df)
-    return parsed, GrepFilter(op="and", include=('"k":[0-9]+}',)).apply(parsed)
+    # the parse stage and the filter chain's survival predicate over it
+    return ParserChain([JsonParser()]).apply(df), GrepFilter(op="and", include=('"k":[0-9]+}',)).keep_pred()
 
 rp = ResumablePipeline(os.path.join(tmp, "wd"), SINKS)
 try:

@@ -54,9 +54,10 @@ PARSERS = [
 # single-pattern AND == "this pattern must match": keeps error-level rows and
 # unparsed rows (target "null"); tag-gated so only app-* tags are filtered.
 GREP = GrepFilter(op="and", include=('"level":"(error|ERROR)"|null',), match="app-*")
+METRICS = ("rows_in", "rows_parsed", "rows_dropped", "rows_routed")
 
 
-def _oracle_events():
+def _oracle_parsed():
     evs = []
     for raw, tag, source, i, ts in _corpus():
         ev = oracle.Event(raw=raw, tag=tag, source=source, line_num=i, timestamp=ts)
@@ -68,8 +69,30 @@ def _oracle_events():
             ],
         )
         evs.append(ev)
-    og = oracle.Grep(op="and", include=list(GREP.include), match=GREP.match)
-    return [e for e in evs if og.apply(e)]
+    return evs
+
+
+def _oracle_grep():
+    return oracle.Grep(op="and", include=list(GREP.include), match=GREP.match)
+
+
+def _oracle_events():
+    og = _oracle_grep()
+    return [e for e in _oracle_parsed() if og.apply(e)]
+
+
+def _oracle_metrics():
+    """Per-source rows_in/parsed/dropped/routed from the pure-Python oracle."""
+    og, sinks = _oracle_grep(), {s.name: s.match for s in SINKS}
+    out: dict = {}
+    for ev in _oracle_parsed():
+        m = out.setdefault(ev.source, dict.fromkeys(METRICS, 0))
+        kept = og.apply(ev)
+        m["rows_in"] += 1
+        m["rows_parsed"] += ev.parsed is not None
+        m["rows_dropped"] += not kept
+        m["rows_routed"] += sum(oracle.per_sink_counts([ev], sinks).values()) if kept else 0
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -113,17 +136,22 @@ def test_per_sink_source_counts(spark, pipeline_df):
     assert got == want
 
 
+def _metrics_by(df, key_col):
+    return {
+        r[key_col]: {c: r[c] for c in METRICS}
+        for r in pipeline_metrics(df, GREP.keep_pred(), SINKS, key_col).collect()
+    }
+
+
 def test_pipeline_metrics_invariants(spark, pipeline_df):
-    parsed, kept = pipeline_df
-    m = {r["source"]: r for r in pipeline_metrics(parsed, kept, SINKS).collect()}
-    total_in = sum(r["rows_in"] for r in m.values())
-    assert total_in == 300
-    for source, r in m.items():
-        assert r["rows_in"] >= r["rows_parsed"]
-        assert 0 <= r["rows_dropped"] <= r["rows_in"]
-    # unparsed garbage rows survive grep only via the "null" include pattern
-    evs = _oracle_events()
-    assert sum(r["rows_in"] - r["rows_dropped"] for r in m.values()) == len(evs)
+    parsed, _ = pipeline_df
+    got = _metrics_by(parsed, "source")
+    want = _oracle_metrics()
+    assert got == want
+    assert sum(m["rows_in"] for m in got.values()) == 300
+    # every metric is exercised: some rows unparsed, some dropped, fan-out
+    assert all(sum(m[c] for m in got.values()) > 0 for c in METRICS)
+    assert sum(m["rows_parsed"] for m in got.values()) < 300
 
 
 def test_static_field_merge_overwrites(spark):
@@ -150,13 +178,14 @@ def test_broadcast_enrich_left_join(spark):
 
 
 def test_per_partition_metrics(spark, pipeline_df):
-    from go_log_forwarder_spark.operators.aggregate import per_partition_metrics
-
+    # the per-partition view is the same core keyed by spark_partition_id
     parsed, _ = pipeline_df
-    m = per_partition_metrics(parsed, run_id="r").collect()
-    assert sum(r["rows_in"] for r in m) == 300
-    assert all(r["rows_parsed"] <= r["rows_in"] for r in m)
-    assert len(m) >= 1 and all(r["run_id"] == "r" for r in m)
+    by_part = _metrics_by(parsed.withColumn("partition_id", F.spark_partition_id()), "partition_id")
+    by_source = _metrics_by(parsed, "source")
+    assert len(by_part) >= 1
+    assert all(m["rows_parsed"] <= m["rows_in"] for m in by_part.values())
+    for c in METRICS:
+        assert sum(m[c] for m in by_part.values()) == sum(m[c] for m in by_source.values())
 
 
 def test_fan_out_writes_one_job_per_sink(spark, tmp_path):

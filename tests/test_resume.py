@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from go_log_forwarder_spark.functions.filters import GrepFilter
 from go_log_forwarder_spark.functions.parsers import JsonParser, ParserChain
 from go_log_forwarder_spark.operators.routing import SinkSpec
-from go_log_forwarder_spark.plans.lineage import ResumablePipeline, TableLineageStore
+from go_log_forwarder_spark.operators.aggregate import pipeline_metrics
+from go_log_forwarder_spark.plans.lineage import ResumablePipeline
 from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
 
 SINKS = [SinkSpec("all", "*"), SinkSpec("err", "evt-err*")]
@@ -25,14 +26,16 @@ def _write_input(spark, path, n=400, files=8):
         .alias("raw"),
         F.when(F.col("id") % 3 == 0, F.lit("evt-error")).otherwise(F.lit("evt-ok")).alias("tag"),
         F.lit(datetime.datetime(2024, 1, 1)).alias("ingest_time"),
+        F.concat(F.lit("src"), (F.col("id") % 5).cast("string")).alias("source"),
     )
     df.repartition(files).write.mode("overwrite").parquet(path)
 
 
+GREP = GrepFilter(op="and", include=('"k":[0-9]*[02468]}|null',))
+
+
 def _pipeline_fn(df):
-    parsed = ParserChain([JsonParser()]).apply(df)
-    kept = GrepFilter(op="and", include=('"k":[0-9]*[02468]}|null',)).apply(parsed)
-    return parsed, kept
+    return ParserChain([JsonParser()]).apply(df), GREP.keep_pred()
 
 
 def _totals(spark, workdir):
@@ -44,29 +47,24 @@ def _totals(spark, workdir):
     return out
 
 
-def _mk_rp(spark, workdir, store_kind):
-    lineage = (
-        TableLineageStore(spark, workdir + "_lineage_tbl")
-        if store_kind == "table"
-        else None
-    )
-    return ResumablePipeline(workdir, SINKS, lineage=lineage)
+# one lineage store (the JSON LineageStore); the "json" id is kept stable
+_STORE = pytest.mark.parametrize("store_kind", ["json"])
 
 
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@_STORE
 def test_clean_vs_crash_resume(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input")
     _write_input(spark, inp)
 
     # clean single run
     clean_dir = str(tmp_path / "clean")
-    rp = _mk_rp(spark, clean_dir, store_kind)
+    rp = ResumablePipeline(clean_dir, SINKS)
     res = rp.run(spark, inp, _pipeline_fn, run_id="r1")
     assert res["processed"] == 8 and res["skipped"] == 0
 
     # crashed run: lineage committed for only 3 units, then failure
     crash_dir = str(tmp_path / "crash")
-    rp2 = _mk_rp(spark, crash_dir, store_kind)
+    rp2 = ResumablePipeline(crash_dir, SINKS)
     with pytest.raises(RuntimeError, match="injected failure"):
         rp2.run(spark, inp, _pipeline_fn, run_id="r1", fail_after_units=3)
     assert len(rp2.lineage.committed("r1")) == 3
@@ -99,6 +97,37 @@ def test_lineage_metrics(spark, tmp_path):
     for r in rows:
         assert r["status"] == "committed"
         assert 0 <= r["rows_dropped"] <= r["rows_in"]
+    # per-unit lineage sums == the one accounting core keyed by source
+    metrics = ["rows_in", "rows_parsed", "rows_dropped", "rows_routed"]
+    parsed, keep = _pipeline_fn(spark.read.parquet(inp))
+    by_source = pipeline_metrics(parsed, keep, SINKS).collect()
+    assert len(by_source) == 5
+    assert {c: sum(r[c] for r in rows) for c in metrics} == {
+        c: sum(r[c] for r in by_source) for c in metrics
+    }
+    assert sum(r["rows_routed"] for r in rows) > sum(r["rows_in"] - r["rows_dropped"] for r in rows)
+
+
+def test_run_leaves_session_conf(spark, tmp_path):
+    # dynamic partition overwrite is a per-write option: with the session
+    # at STATIC, a second batch must keep the first batch's unit partitions
+    # and the session conf must be left as found
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        inp = str(tmp_path / "input5")
+        _write_input(spark, inp, n=100, files=4)
+        wd = str(tmp_path / "wd5")
+        rp = ResumablePipeline(wd, SINKS)
+        for _ in range(2):
+            assert rp.run(spark, inp, _pipeline_fn, run_id="c1", max_units_per_batch=2)["processed"] == 2
+        assert spark.conf.get(key) == "STATIC"
+        clean = str(tmp_path / "clean5")
+        ResumablePipeline(clean, SINKS).run(spark, inp, _pipeline_fn, run_id="c1")
+        assert _totals(spark, wd) == _totals(spark, clean)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_snapshot_store_atomic_and_incremental(spark, tmp_path):
@@ -141,7 +170,7 @@ def _replace_unit_smaller(spark, unit_uri, tmp_path):
         os.remove(crc)
 
 
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@_STORE
 def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
     # S3 truncation parity: a committed unit whose file shrank is
     # invalidated and reprocessed exactly once; its sink output is REPLACED
@@ -149,7 +178,7 @@ def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input3")
     _write_input(spark, inp, n=200, files=4)
     wd = str(tmp_path / "wd3")
-    rp = _mk_rp(spark, wd, store_kind)
+    rp = ResumablePipeline(wd, SINKS)
     assert rp.run(spark, inp, _pipeline_fn, run_id="t1")["processed"] == 4
 
     unit = rp.list_units(spark, inp)[1]
@@ -160,14 +189,14 @@ def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
 
     # outputs equal a clean run over the CURRENT (post-truncation) input
     clean = str(tmp_path / "clean3")
-    _mk_rp(spark, clean, store_kind).run(spark, inp, _pipeline_fn, run_id="t1")
+    ResumablePipeline(clean, SINKS).run(spark, inp, _pipeline_fn, run_id="t1")
     assert _totals(spark, wd) == _totals(spark, clean)
 
     # stable afterwards: nothing reprocesses
     assert rp.run(spark, inp, _pipeline_fn, run_id="t1")["processed"] == 0
 
 
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@_STORE
 def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     # replacement detection beyond shrinks: a committed unit whose file GREW
     # (append/rotation landing a bigger file) must also invalidate — size
@@ -180,7 +209,7 @@ def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input4")
     _write_input(spark, inp, n=100, files=4)
     wd = str(tmp_path / "wd4")
-    rp = _mk_rp(spark, wd, store_kind)
+    rp = ResumablePipeline(wd, SINKS)
     assert rp.run(spark, inp, _pipeline_fn, run_id="g1")["processed"] == 4
 
     # replace one unit with a BIGGER file (more rows, same schema)
@@ -199,7 +228,7 @@ def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     assert res["processed"] == 1 and res["skipped"] == 3
     # matches a clean run over the current input; stable afterwards
     clean = str(tmp_path / "clean4")
-    _mk_rp(spark, clean, store_kind).run(spark, inp, _pipeline_fn, run_id="g1")
+    ResumablePipeline(clean, SINKS).run(spark, inp, _pipeline_fn, run_id="g1")
     assert _totals(spark, wd) == _totals(spark, clean)
     assert rp.run(spark, inp, _pipeline_fn, run_id="g1")["processed"] == 0
 
